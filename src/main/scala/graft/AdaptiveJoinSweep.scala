@@ -39,15 +39,16 @@ object AdaptiveJoinSweep {
     }
     for (np <- Seq(3, 4, 5)) {
       val fixed = recallOf(
-        operators.Ann.ivfJoin(spark, layout, qs, centroids, k = k, nProbe = np))
+        operators.Ann.ivfJoin(spark, layout, qs, centroids, k = k,
+          operators.Ann.CellProbe.Nearest(nProbe = np)))
       println(f"fixed nProbe=$np: recall=$fixed%.3f probes=$np.000")
     }
     for (nMax <- Seq(4, 5, 6); ratio <- Seq(1.25, 1.5, 2.0, 3.0)) {
       val probes = qs.select(size(expressions.VectorExpressions
           .ivfCellProbesAdaptive(col("q_embedding"), centroids, nMax, ratio)).as("n"))
         .agg(avg("n")).head().getDouble(0)
-      val rec = recallOf(operators.Ann.ivfJoinAdaptive(
-        spark, layout, qs, centroids, k = k, nProbeMax = nMax, ratio = ratio))
+      val rec = recallOf(operators.Ann.ivfJoin(spark, layout, qs, centroids, k = k,
+        operators.Ann.CellProbe.Adaptive(nProbeMax = nMax, ratio = ratio)))
       println(f"nMax=$nMax ratio=$ratio%.2f: recall=$rec%.3f probes=$probes%.3f")
     }
     spark.stop()

@@ -275,7 +275,7 @@ private[graft] object AnnOracle {
           |  JOIN embeddings e ON e.vec_id = s.vec_id""".stripMargin, k)}""".stripMargin
 
   /** `ann_recall_murmur` mirror: recall@10 of the murmur home-ball tier
-    * ([[Ann.lshTopK]] at probeBits=2, raw-sim rank) against the exact
+    * ([[Ann.lshTopK]] with a probeBits=2 ball, raw-sim rank) against the exact
     * brute-force top-10, per query plus the macro mean (query_id = -1) —
     * the quality-contract row `ann_recall` gives the portable tier,
     * now expressible for the murmur tier too since its signatures
@@ -477,7 +477,7 @@ private[graft] object AnnOracle {
           |  JOIN asg a ON a.cell = p.cell
           |  JOIN embeddings e ON e.vec_id = a.vec_id""".stripMargin, k)}""".stripMargin
 
-  /** The QUERY-ADAPTIVE probe set of [[Ann.ivfJoinAdaptive]] — the
+  /** The QUERY-ADAPTIVE probe set of [[Ann.CellProbe.Adaptive]] — the
     * kernel's best-first emission with the distance-ratio cut replayed
     * as rank + predicate (the cut is monotone along the probe order, so
     * "break at the first miss" ≡ "keep every rank passing the

@@ -379,7 +379,8 @@ object ScaleEvidence {
     val bigVecs = expandedVectors(variants)
     val layoutPath = tempDir("graft_scale_ann")
     val (_, tLayout) = timed {
-      operators.Ann.writeSignaturePartitioned(bigVecs, layoutPath, nBits = 8)
+      operators.Ann.writeSignaturePartitioned(bigVecs, layoutPath,
+        operators.Ann.LshProbe.Ball(nBits = 8))
     }
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
@@ -395,7 +396,7 @@ object ScaleEvidence {
       .distinct.length
     val (annTop, tProbe) = timed {
       operators.Ann.lshTopKPartitioned(spark, layoutPath, queries, k = 5,
-        nBits = 8, probeBits = 1)
+        operators.Ann.LshProbe.Ball(nBits = 8, probeBits = 1))
         .filter(col("rank") === 1).select("query_id", "vec_id")
         .collect().map(r => (r.getLong(0), r.getLong(1)))
     }
@@ -848,10 +849,10 @@ object ScaleEvidence {
       try {
         val (rs, ts) = timed {
           operators.Ann.ivfJoin(spark, s"$ajDir/small", ajQ, ivfCents,
-            k = 10, nProbe = 8).count()
+            k = 10, operators.Ann.CellProbe.Nearest(nProbe = 8)).count()
         }
         val ajBigDf = operators.Ann.ivfJoin(spark, s"$ajDir/big", ajQ, ivfCents,
-          k = 10, nProbe = 8)
+          k = 10, operators.Ann.CellProbe.Nearest(nProbe = 8))
         val (rb, tb) = timed { ajBigDf.count() }
         (rs, ts, rb, tb, ajBigDf.queryExecution.executedPlan.toString)
       } finally spark.conf.set(abtKey, abtOld)
@@ -909,7 +910,7 @@ object ScaleEvidence {
     def skewRun(cap: Int): (Set[(Long, Int, Long)], Double) = {
       val (rows, t) = timed {
         operators.Ann.ivfJoin(spark, s"$ajDir/skew", skewQ, ivfCents,
-          k = 10, nProbe = 8, hotCellCap = cap, maxSalt = 64)
+          k = 10, operators.Ann.CellProbe.Nearest(nProbe = 8), hotKeyCap = cap, maxSalt = 64)
           .select("query_id", "rank", "vec_id").collect()
           .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
       }
@@ -947,7 +948,8 @@ object ScaleEvidence {
     // recorded against its all-pairs ceiling.
     val ljDir = tempDir("graft_scale_lshjoin")
     val (_, tLjLayout) = timed {
-      operators.Ann.writeSignaturePartitioned(froVecs, ljDir, nBits = 8)
+      operators.Ann.writeSignaturePartitioned(froVecs, ljDir,
+        operators.Ann.LshProbe.Ball(nBits = 8))
     }
     val ljSigU = udf((v: Seq[Float]) =>
       if (v == null) Array.empty[Int]
@@ -963,7 +965,8 @@ object ScaleEvidence {
     spark.conf.set(abtKey, "-1")
     val (ljRows, tLj, ljPlan) =
       try {
-        val ljDf = operators.Ann.lshJoin(spark, ljDir, ajQ, k = 10, nBits = 8, probeBits = 1)
+        val ljDf = operators.Ann.lshJoin(spark, ljDir, ajQ, k = 10,
+          operators.Ann.LshProbe.Ball(nBits = 8, probeBits = 1))
         val (r, t) = timed { ljDf.count() }
         (r, t, ljDf.queryExecution.executedPlan.toString)
       } finally spark.conf.set(abtKey, abtOld)

@@ -2249,7 +2249,8 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      operators.Ann.lshTopK(qs, emb, k = 2, nBits = 8, probeBits = 2)
+      operators.Ann.lshTopK(qs, emb, k = 2,
+        operators.Ann.LshProbe.Ball(nBits = 8, probeBits = 2))
         .withColumn("sim", TextAnalysis.floorScale(col("sim"), 6))
         .orderBy("query_id", "rank")
     }),
@@ -2262,7 +2263,8 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      operators.Ann.lshTopKAdaptive(qs, emb, k = 2, nBits = 8, nProbes = 16)
+      operators.Ann.lshTopK(qs, emb, k = 2,
+        operators.Ann.LshProbe.Adaptive(nBits = 8, nProbes = 16))
         .withColumn("sim", TextAnalysis.floorScale(col("sim"), 6))
         .orderBy("query_id", "rank")
     }),
@@ -2275,7 +2277,8 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      operators.Ann.lshTopKPortable(qs, emb, k = 2, nBits = 8, probeBits = 1)
+      operators.Ann.lshTopK(qs, emb, k = 2,
+        operators.Ann.LshProbe.Portable(nBits = 8, probeBits = 1))
         .orderBy("query_id", "rank")
     }),
 
@@ -2290,11 +2293,11 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val base = new java.io.File(
         sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.signaturePartitionedLayoutMurmur(s, emb, base, nBits = 8)
+      val probe = operators.Ann.LshProbe.Adaptive(nBits = 8, nProbes = 16)
+      val layout = operators.Ann.signaturePartitionedLayout(s, emb, base, probe)
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      val out = operators.Ann.lshTopKPartitionedAdaptive(
-        s, layout, qs, k = 2, nBits = 8, nProbes = 16)
+      val out = operators.Ann.lshTopKPartitioned(s, layout, qs, k = 2, probe)
         .withColumn("sim", TextAnalysis.floorScale(col("sim"), 6))
         .orderBy("query_id", "rank")
       val expectedDirs = qs.select("q_embedding").collect()
@@ -2323,11 +2326,11 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val base = new java.io.File(
         sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.signaturePartitionedLayout(s, emb, base, nBits = 8)
+      val probe = operators.Ann.LshProbe.Portable(nBits = 8, probeBits = 1)
+      val layout = operators.Ann.signaturePartitionedLayout(s, emb, base, probe)
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      operators.Ann.lshTopKPartitionedPortable(
-        s, layout, qs, k = 2, nBits = 8, probeBits = 1)
+      operators.Ann.lshTopKPartitioned(s, layout, qs, k = 2, probe)
         .orderBy("query_id", "rank")
     }),
 
@@ -2343,10 +2346,11 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val base = new java.io.File(
         sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.signaturePartitionedLayoutMurmur(s, emb, base, nBits = 8)
+      val probe = operators.Ann.LshProbe.Ball(nBits = 8, probeBits = 2)
+      val layout = operators.Ann.signaturePartitionedLayout(s, emb, base, probe)
       val qs = emb.filter(col("vec_id") < 50)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      operators.Ann.lshJoin(s, layout, qs, k = 5, nBits = 8, probeBits = 2)
+      operators.Ann.lshJoin(s, layout, qs, k = 5, probe)
         .withColumn("sim", TextAnalysis.floorScale(col("sim"), 6))
         .orderBy("query_id", "rank")
     }),
@@ -2366,10 +2370,11 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val base = new java.io.File(
         sys.props("java.io.tmpdir"), "graft_ann_layouts").getAbsolutePath
-      val layout = operators.Ann.signaturePartitionedLayoutMurmur(s, emb, base, nBits = 8)
+      val probe = operators.Ann.LshProbe.Adaptive(nBits = 8, nProbes = 16)
+      val layout = operators.Ann.signaturePartitionedLayout(s, emb, base, probe)
       val qs = emb.filter(col("vec_id") < 50)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      operators.Ann.lshJoinAdaptive(s, layout, qs, k = 5, nBits = 8, nProbes = 16)
+      operators.Ann.lshJoin(s, layout, qs, k = 5, probe)
         .withColumn("sim", TextAnalysis.floorScale(col("sim"), 6))
         .orderBy("query_id", "rank")
     }),
@@ -2386,7 +2391,7 @@ object SparkEntry {
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       val k = 10
       val approx = operators.Ann
-        .lshTopKPortable(qs, emb, k = k, nBits = 8, probeBits = 1)
+        .lshTopK(qs, emb, k = k, operators.Ann.LshProbe.Portable(nBits = 8, probeBits = 1))
         .select("query_id", "vec_id")
       val exact = Retrieval.knnJoin(qs, emb, k = k).select("query_id", "vec_id")
       val inter = exact.join(approx, Seq("query_id", "vec_id"))
@@ -2418,7 +2423,7 @@ object SparkEntry {
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
       val k = 10
       val approx = operators.Ann
-        .lshTopK(qs, emb, k = k, nBits = 8, probeBits = 2)
+        .lshTopK(qs, emb, k = k, operators.Ann.LshProbe.Ball(nBits = 8, probeBits = 2))
         .select("query_id", "vec_id")
       val exact = Retrieval.knnJoin(qs, emb, k = k).select("query_id", "vec_id")
       val inter = exact.join(approx, Seq("query_id", "vec_id"))
@@ -2467,7 +2472,8 @@ object SparkEntry {
         centroids)
       val qs = emb.filter(col("vec_id") < 50)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      operators.Ann.ivfJoin(s, layout, qs, centroids, k = 5, nProbe = 3)
+      operators.Ann.ivfJoin(s, layout, qs, centroids, k = 5,
+        operators.Ann.CellProbe.Nearest(nProbe = 3))
         .withColumn("sim", TextAnalysis.floorScale(col("sim"), 6))
         .orderBy("query_id", "rank")
     }),
@@ -2475,7 +2481,7 @@ object SparkEntry {
     "ann_ivf_join_salted" -> ((s, dir) => {
       // `ann_ivf_join` with the hot-bucket salting guard GENUINELY
       // FIRING (r17; the r16 verdict noted no registry query exercised
-      // a skewed bucket): hotCellCap = 32 sits below every cell's
+      // a skewed bucket): hotKeyCap = 32 sits below every cell's
       // occupancy at these SFs (≥ ~60 rows/cell at sf0.001+), so every
       // probed cell splits into salt sub-buckets and the (cell, salt)
       // exchange is the plan that produced these rows. Salting is
@@ -2498,8 +2504,8 @@ object SparkEntry {
         "ann_ivf_join_salted: no cell exceeds the cap - the guard would not fire")
       val qs = emb.filter(col("vec_id") < 50)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      operators.Ann.ivfJoin(s, layout, qs, centroids, k = 5, nProbe = 3,
-        hotCellCap = 32, maxSalt = 8)
+      operators.Ann.ivfJoin(s, layout, qs, centroids, k = 5,
+        operators.Ann.CellProbe.Nearest(nProbe = 3), hotKeyCap = 32, maxSalt = 8)
         .withColumn("sim", TextAnalysis.floorScale(col("sim"), 6))
         .orderBy("query_id", "rank")
     }),
@@ -2525,7 +2531,8 @@ object SparkEntry {
         centroids)
       val qs = emb.filter(col("vec_id") < 50)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      operators.Ann.ivfJoinAdaptive(s, layout, qs, centroids, k = 5)
+      operators.Ann.ivfJoin(s, layout, qs, centroids, k = 5,
+        operators.Ann.CellProbe.Adaptive())
         .withColumn("sim", TextAnalysis.floorScale(col("sim"), 6))
         .orderBy("query_id", "rank")
     }),
@@ -2927,7 +2934,8 @@ object SparkEntry {
       val layout = operators.Ann.ivfPqLayout(s, emb, base, centroids, books)
       val qs = emb.filter(col("vec_id") < 50)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      operators.Ann.ivfPqJoin(s, layout, qs, centroids, books, k = 5, nProbe = 3)
+      operators.Ann.ivfPqJoin(s, layout, qs, centroids, books, k = 5,
+        operators.Ann.CellProbe.Nearest(nProbe = 3))
         .orderBy("query_id", "rank")
     }),
 
@@ -2949,7 +2957,8 @@ object SparkEntry {
       val layout = operators.Ann.ivfPqLayout(s, emb, base, centroids, books)
       val qs = emb.filter(col("vec_id") < 50)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      operators.Ann.ivfPqJoinAdaptive(s, layout, qs, centroids, books, k = 5)
+      operators.Ann.ivfPqJoin(s, layout, qs, centroids, books, k = 5,
+        operators.Ann.CellProbe.Adaptive())
         .orderBy("query_id", "rank")
     }),
 
@@ -6631,7 +6640,7 @@ object SparkEntry {
     // Portable-signature LSH ANN, fully hash-checked: corpus signatures,
     // query multiprobe set (signature plus every single-bit flip),
     // bucket equi-join, floored cosine rerank, rank cut — each stage the
-    // exact SQL mirror of lshTopKPortable.
+    // exact SQL mirror of the portable lshTopK.
     "ann_lsh_portable" ->
       """WITH s AS (
         |  SELECT vec_id, embedding,

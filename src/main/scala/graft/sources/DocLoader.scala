@@ -99,7 +99,7 @@ object DocLoader {
           val out = new ByteArrayOutputStream()
           val buf = new Array[Byte](8192)
           var n = zin.read(buf)
-          while (n >= 0) { out.write(buf, 0, n); n = zin.read(buf) }
+          while (n >= 0) { boundedWrite(out, buf, n); n = zin.read(buf) }
           return out.toByteArray
         }
         e = zin.getNextEntry
@@ -314,10 +314,29 @@ object DocLoader {
       while (!inf.finished() && !inf.needsInput()) {
         val n = inf.inflate(buf)
         if (n == 0 && !inf.finished()) return out.toByteArray
-        out.write(buf, 0, n)
+        boundedWrite(out, buf, n)
       }
       out.toByteArray
-    } catch { case _: Exception => null } finally inf.end()
+    } catch {
+      case e: InflateLimitExceeded => throw e // the whole document is a parse_error
+      case _: Exception => null
+    } finally inf.end()
+  }
+
+  /** Ceiling on the bytes one FlateDecode stream or DOCX entry may
+    * inflate to: far above any real page or document part, far below a
+    * decompression bomb — a 0.5 MB stream inflating to 512 MiB otherwise
+    * throws OutOfMemoryError, which no `catch Exception` contains. A
+    * document that crosses it routes to `parse_error`.
+    */
+  val MaxInflatedBytes: Int = 64 << 20
+
+  private final class InflateLimitExceeded
+    extends Exception(s"inflated size exceeds $MaxInflatedBytes bytes")
+
+  private def boundedWrite(out: ByteArrayOutputStream, buf: Array[Byte], n: Int): Unit = {
+    if (out.size.toLong + n > MaxInflatedBytes) throw new InflateLimitExceeded
+    out.write(buf, 0, n)
   }
 
   /** Catalog → /Pages → /Kids depth-first walk; None when no catalog (then

@@ -51,10 +51,10 @@ class AnnSkewSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "rank", "vec_id", "sim")
         .as[(Long, Int, Long, Double)].collect().toSet
-    val unsalted = rows(Ann.ivfJoin(spark, dir, qs, centroids, k = 5, nProbe = 2,
-      hotCellCap = 0))
-    val salted = rows(Ann.ivfJoin(spark, dir, qs, centroids, k = 5, nProbe = 2,
-      hotCellCap = 16, maxSalt = 8))
+    val unsalted = rows(Ann.ivfJoin(spark, dir, qs, centroids, k = 5,
+      Ann.CellProbe.Nearest(nProbe = 2), hotKeyCap = 0))
+    val salted = rows(Ann.ivfJoin(spark, dir, qs, centroids, k = 5,
+      Ann.CellProbe.Nearest(nProbe = 2), hotKeyCap = 16, maxSalt = 8))
     assert(salted == unsalted,
       "salting must not change any result row — hot-cell queries included")
     assert(salted.nonEmpty)
@@ -99,8 +99,8 @@ class AnnSkewSpec extends AnyFunSuite with SparkTestSession {
     val qs = corpus.filter($"vec_id" < 3)
       .select($"vec_id".as("query_id"), $"embedding".as("q_embedding"))
     val e = intercept[IllegalArgumentException] {
-      Ann.ivfJoin(spark, dir, qs, centroids, k = 5, nProbe = 2,
-        hotCellCap = 16, maxSalt = 0)
+      Ann.ivfJoin(spark, dir, qs, centroids, k = 5,
+        Ann.CellProbe.Nearest(nProbe = 2), hotKeyCap = 16, maxSalt = 0)
     }
     assert(e.getMessage.contains("maxSalt"))
   }
@@ -109,7 +109,7 @@ class AnnSkewSpec extends AnyFunSuite with SparkTestSession {
     // the 20%-cluster hashes to one murmur signature bucket — the
     // degenerate-signature case
     val dir = Files.createTempDirectory("graft_skew_lsh").toString
-    Ann.writeSignaturePartitioned(corpus, dir, nBits = 8)
+    Ann.writeSignaturePartitioned(corpus, dir, Ann.LshProbe.Ball(nBits = 8))
     val occ = spark.read.parquet(dir).groupBy("sig").count()
       .agg(max("count")).as[Long].head()
     assert(occ >= 100, s"fixture not skewed: max sig occupancy $occ")
@@ -118,10 +118,10 @@ class AnnSkewSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "rank", "vec_id", "sim")
         .as[(Long, Int, Long, Double)].collect().toSet
-    val unsalted = rows(Ann.lshJoin(spark, dir, qs, k = 5, nBits = 8,
-      probeBits = 2, hotSigCap = 0))
-    val salted = rows(Ann.lshJoin(spark, dir, qs, k = 5, nBits = 8,
-      probeBits = 2, hotSigCap = 16, maxSalt = 8))
+    val ball2 = Ann.LshProbe.Ball(nBits = 8, probeBits = 2)
+    val unsalted = rows(Ann.lshJoin(spark, dir, qs, k = 5, ball2, hotKeyCap = 0))
+    val salted = rows(Ann.lshJoin(spark, dir, qs, k = 5, ball2,
+      hotKeyCap = 16, maxSalt = 8))
     assert(salted == unsalted,
       "salting must not change any result row — hot-bucket queries included")
     assert(salted.nonEmpty)
@@ -138,9 +138,9 @@ class AnnSkewSpec extends AnyFunSuite with SparkTestSession {
       df.select("query_id", "rank", "vec_id", "adc_dist")
         .as[(Long, Int, Long, Double)].collect().toSet
     val unsalted = rows(Ann.ivfPqJoin(spark, dir, qs, centroids, books,
-      k = 5, nProbe = 2, hotCellCap = 0))
+      k = 5, Ann.CellProbe.Nearest(nProbe = 2), hotKeyCap = 0))
     val salted = rows(Ann.ivfPqJoin(spark, dir, qs, centroids, books,
-      k = 5, nProbe = 2, hotCellCap = 16, maxSalt = 8))
+      k = 5, Ann.CellProbe.Nearest(nProbe = 2), hotKeyCap = 16, maxSalt = 8))
     assert(salted == unsalted,
       "salting must not change any result row of the PQ join")
     assert(salted.nonEmpty)

@@ -13,7 +13,7 @@ import graft.sources.DocLoader
   * delimiters, backslash runs, XML entities, unicode outside Latin-1,
   * control-ish whitespace, and newline placement at every position.
   */
-class DocRoundTripSpec extends AnyFunSuite {
+class DocRoundTripSpec extends AnyFunSuite with SparkTestSession {
 
   private val charGen: Gen[String] = Gen.frequency(
     10 -> Gen.alphaNumStr.map(_.take(8)),
@@ -212,5 +212,60 @@ class DocRoundTripSpec extends AnyFunSuite {
     // Latin-1 range decodes identically through the base table
     val latin = Seq("café naïve Ærø")
     assert(DocLoader.extractPdfPages(DocLoader.buildPdfWinAnsi(latin)).map(_._2) == latin)
+  }
+
+  // ---- decompression bombs: a stream that inflates past
+  // DocLoader.MaxInflatedBytes must route its whole document to
+  // parse_error (one row, no exception) instead of exhausting the heap.
+  private val bombBytes = DocLoader.MaxInflatedBytes + (1L << 20)
+
+  /** Feed `n` zero bytes, 1 MiB at a time, through `write`. */
+  private def zeros(n: Long)(write: (Array[Byte], Int) => Unit): Unit = {
+    val chunk = new Array[Byte](1 << 20)
+    var left = n
+    while (left > 0) { val k = math.min(left, chunk.length.toLong).toInt; write(chunk, k); left -= k }
+  }
+
+  private def statusRows(name: String, bytes: Array[Byte]): Array[(String, String)] = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_bomb")
+    java.nio.file.Files.write(dir.resolve(name), bytes)
+    DocLoader.loadDocumentsWithStatus(spark, dir.toString)
+      .select("text", "extraction_status").as[(String, String)].collect()
+  }
+
+  test("decompression bomb: an oversized PDF Flate stream is one parse_error row") {
+    val d = new java.util.zip.Deflater(java.util.zip.Deflater.BEST_COMPRESSION)
+    val deflated = new java.io.ByteArrayOutputStream()
+    val buf = new Array[Byte](1 << 16)
+    def drain(): Unit = while (!d.needsInput()) deflated.write(buf, 0, d.deflate(buf))
+    zeros(bombBytes) { (chunk, k) => d.setInput(chunk, 0, k); drain() }
+    d.finish()
+    while (!d.finished()) deflated.write(buf, 0, d.deflate(buf))
+    d.end()
+    val stream = deflated.toByteArray
+    val pdf = new java.io.ByteArrayOutputStream()
+    pdf.write(("%PDF-1.4\n1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n" +
+      "2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n" +
+      "3 0 obj\n<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>\nendobj\n" +
+      s"4 0 obj\n<< /Length ${stream.length} /Filter /FlateDecode >>\nstream\n").getBytes("ISO-8859-1"))
+    pdf.write(stream)
+    pdf.write("\nendstream\nendobj\n%%EOF\n".getBytes("ISO-8859-1"))
+    assert(stream.length < (1 << 20), s"bomb fixture is not a bomb: ${stream.length} bytes")
+    assert(statusRows("bomb.pdf", pdf.toByteArray).toSeq ==
+      Seq((null, DocLoader.StatusParseError)))
+  }
+
+  test("decompression bomb: an oversized DOCX document part is one parse_error row") {
+    val docx = new java.io.ByteArrayOutputStream()
+    val zos = new java.util.zip.ZipOutputStream(docx)
+    zos.setLevel(java.util.zip.Deflater.BEST_COMPRESSION)
+    zos.putNextEntry(new java.util.zip.ZipEntry("word/document.xml"))
+    zeros(bombBytes) { (chunk, k) => zos.write(chunk, 0, k) }
+    zos.closeEntry()
+    zos.close()
+    assert(docx.size < (1 << 20), s"bomb fixture is not a bomb: ${docx.size} bytes")
+    assert(statusRows("bomb.docx", docx.toByteArray).toSeq ==
+      Seq((null, DocLoader.StatusParseError)))
   }
 }

@@ -45,13 +45,13 @@ class MultiProbeSpec extends AnyFunSuite with SparkTestSession {
     val queries = Seq.tabulate(5)(i => (1000L + i, vec(rnd)))
       .toDF("query_id", "q_embedding")
     val dir = java.nio.file.Files.createTempDirectory("graft_mp_layout").toString
-    Ann.writeSignaturePartitioned(corpus, s"$dir/sig", nBits = 8)
+    val probe = Ann.LshProbe.Adaptive(nBits = 8, nProbes = 16)
+    Ann.writeSignaturePartitioned(corpus, s"$dir/sig", probe)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "rank", "vec_id", "sim")
         .as[(Long, Int, Long, Double)].collect().toSet
-    val part = rows(Ann.lshTopKPartitionedAdaptive(
-      spark, s"$dir/sig", queries, k = 5, nBits = 8, nProbes = 16))
-    val mem = rows(Ann.lshTopKAdaptive(queries, corpus, k = 5, nBits = 8, nProbes = 16))
+    val part = rows(Ann.lshTopKPartitioned(spark, s"$dir/sig", queries, k = 5, probe))
+    val mem = rows(Ann.lshTopK(queries, corpus, k = 5, probe))
     assert(part == mem)
     assert(part.nonEmpty)
   }
@@ -68,9 +68,9 @@ class MultiProbeSpec extends AnyFunSuite with SparkTestSession {
     val exact = asSet(graft.operators.Retrieval.knnJoin(queries, corpus, k))
     def recall(approx: Set[(Long, Long)]): Double =
       exact.count(approx.contains).toDouble / exact.size
-    val rAdaptive = recall(asSet(Ann.lshTopKAdaptive(queries, corpus, k, nBits = 8, nProbes = 16)))
-    val rHam1 = recall(asSet(Ann.lshTopK(queries, corpus, k, nBits = 8, probeBits = 1)))
-    val rHam2 = recall(asSet(Ann.lshTopK(queries, corpus, k, nBits = 8, probeBits = 2)))
+    val rAdaptive = recall(asSet(Ann.lshTopK(queries, corpus, k, Ann.LshProbe.Adaptive(nBits = 8, nProbes = 16))))
+    val rHam1 = recall(asSet(Ann.lshTopK(queries, corpus, k, Ann.LshProbe.Ball(nBits = 8, probeBits = 1))))
+    val rHam2 = recall(asSet(Ann.lshTopK(queries, corpus, k, Ann.LshProbe.Ball(nBits = 8, probeBits = 2))))
     info(f"recall@5: adaptive16=$rAdaptive%.3f hamming1(9 probes)=$rHam1%.3f hamming2(37 probes)=$rHam2%.3f")
     assert(rAdaptive >= rHam1,
       f"adaptive(16) $rAdaptive%.3f under hamming-1 $rHam1%.3f")

@@ -353,7 +353,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
   test("LSH ANN: deterministic signatures, self-retrieval, useful recall") {
     val sig1 = Ann.signature(Array(1f, 2f, 3f), 8)
     assert(sig1 == Ann.signature(Array(1f, 2f, 3f), 8))
-    val out = Ann.lshTopK(queries, corpus, k = 5, nBits = 8, probeBits = 2)
+    val out = Ann.lshTopK(queries, corpus, k = 5, Ann.LshProbe.Ball(nBits = 8, probeBits = 2))
       .select("query_id", "vec_id").as[(Long, Long)].collect()
     // a vector always lands in its own bucket -> every query finds itself
     val selfHits = out.filter { case (q, v) => q == v }
@@ -361,7 +361,8 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     val r = recall(out)
     assert(r >= 0.3, s"LSH recall too low: $r")
     // probing wider must not reduce recall vs the narrow probe
-    val narrow = recall(Ann.lshTopK(queries, corpus, k = 5, nBits = 8, probeBits = 1)
+    val narrow = recall(Ann.lshTopK(queries, corpus, k = 5,
+      Ann.LshProbe.Ball(nBits = 8, probeBits = 1))
       .select("query_id", "vec_id").as[(Long, Long)].collect())
     assert(r >= narrow)
   }
@@ -380,7 +381,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("portable LSH twin: self-retrieval, useful recall, floored sims") {
-    val out = Ann.lshTopKPortable(queries, corpus, k = 5, nBits = 8, probeBits = 2)
+    val out = Ann.lshTopK(queries, corpus, k = 5, Ann.LshProbe.Portable(nBits = 8, probeBits = 2))
       .select("query_id", "vec_id").as[(Long, Long)].collect()
     assert(out.count { case (q, v) => q == v } == 20, "every query finds itself")
     val r = recall(out)
@@ -389,11 +390,12 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
 
   test("signature-partitioned corpus: probes prune partitions, match in-memory LSH") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sigpart").toString
-    Ann.writeSignaturePartitioned(corpus.select("vec_id", "embedding"), dir, nBits = 8)
-    val df = Ann.lshTopKPartitioned(spark, dir, queries, k = 5, nBits = 8, probeBits = 2)
+    val ball2 = Ann.LshProbe.Ball(nBits = 8, probeBits = 2)
+    Ann.writeSignaturePartitioned(corpus.select("vec_id", "embedding"), dir, ball2)
+    val df = Ann.lshTopKPartitioned(spark, dir, queries, k = 5, ball2)
     val out = df.select("query_id", "rank", "vec_id")
       .as[(Long, Int, Long)].collect().toSet
-    val mem = Ann.lshTopK(queries, corpus, k = 5, nBits = 8, probeBits = 2)
+    val mem = Ann.lshTopK(queries, corpus, k = 5, ball2)
       .select("query_id", "rank", "vec_id").as[(Long, Int, Long)].collect().toSet
     assert(out == mem, "partitioned layout must not change results")
     val plan = df.queryExecution.executedPlan.toString
@@ -403,11 +405,12 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
 
   test("portable signature-partitioned layout: prunes partitions, matches portable LSH") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sigpart_portable").toString
-    Ann.writeSignaturePartitionedPortable(corpus.select("vec_id", "embedding"), dir, nBits = 8)
-    val df = Ann.lshTopKPartitionedPortable(spark, dir, queries, k = 5, nBits = 8, probeBits = 2)
+    val portable2 = Ann.LshProbe.Portable(nBits = 8, probeBits = 2)
+    Ann.writeSignaturePartitioned(corpus.select("vec_id", "embedding"), dir, portable2)
+    val df = Ann.lshTopKPartitioned(spark, dir, queries, k = 5, portable2)
     val out = df.select("query_id", "rank", "vec_id", "sim")
       .as[(Long, Int, Long, Double)].collect().toSet
-    val mem = Ann.lshTopKPortable(queries, corpus, k = 5, nBits = 8, probeBits = 2)
+    val mem = Ann.lshTopK(queries, corpus, k = 5, portable2)
       .select("query_id", "rank", "vec_id", "sim")
       .as[(Long, Int, Long, Double)].collect().toSet
     assert(out == mem, "partitioned portable layout must not change results")
@@ -432,20 +435,54 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("fingerprint-keyed layout: reused for identical corpus, rebuilt on mutation") {
+    // The staleness table: one row per build-once layout and memoised
+    // trainer. The same corpus must give the same path (layout not
+    // rewritten) or the same memoised value; dropping one vector must
+    // give a fresh path or key. Trainer parameters stay off the registry
+    // capture suffixes (AnnOracle's |8|3, |8|8|16|5, ...), so these
+    // captures never touch a registry mirror.
+    val vecs = corpus.select("vec_id", "embedding")
+    val mutated = vecs.filter(col("vec_id") =!= 0L)
     val base = java.nio.file.Files.createTempDirectory("graft_layout_fp").toString
-    val p1 = Ann.signaturePartitionedLayout(spark, corpus.select("vec_id", "embedding"), base)
-    val marker = new java.io.File(p1, "_SUCCESS")
-    assert(marker.exists())
-    val mtime = marker.lastModified()
-    // same content → same path, no rewrite (the _SUCCESS marker is untouched)
-    val p2 = Ann.signaturePartitionedLayout(spark, corpus.select("vec_id", "embedding"), base)
-    assert(p2 == p1)
-    assert(marker.lastModified() == mtime, "unchanged corpus must not rebuild the layout")
-    // mutated content (one vector dropped) → different fingerprint → new path
-    val p3 = Ann.signaturePartitionedLayout(
-      spark, corpus.filter(col("vec_id") =!= 0L).select("vec_id", "embedding"), base)
-    assert(p3 != p1, "a mutated corpus must get a fresh layout, never stale probes")
-    assert(new java.io.File(p3, "_SUCCESS").exists())
+    val (centroids, _) = Ann.buildIvf(spark, vecs, nCells = 8, maxIter = 3)
+    val books = Ann.trainPqCodebooks(vecs, m = 8, dsub = 8, kStar = 8, maxIter = 3)
+    val local = Ann.trainLocalPqCodebooks(vecs, centroids, m = 8, dsub = 8, kStar = 4, maxIter = 2)
+    // (entry point, writes a _SUCCESS-marked layout, build)
+    val layouts: Seq[(String, Boolean, org.apache.spark.sql.DataFrame => String)] = Seq(
+      ("signaturePartitionedLayout", true,
+        Ann.signaturePartitionedLayout(spark, _, base, Ann.LshProbe.Portable())),
+      ("cellLayout", true, Ann.cellLayout(spark, _, base, centroids)),
+      ("ivfPqLayout", true, Ann.ivfPqLayout(spark, _, base, centroids, books)),
+      ("ivfPqResidualLayout", true, Ann.ivfPqResidualLayout(spark, _, base, centroids, books)),
+      ("ivfPqLocalLayout", true, Ann.ivfPqLocalLayout(spark, _, base, centroids, local)),
+      ("ivfPqVersionedRoot", false, Ann.ivfPqVersionedRoot(_, base, centroids, books)))
+    layouts.foreach { case (name, writes, build) => withClue(s"$name: ") {
+      val p1 = build(vecs)
+      val marker = new java.io.File(p1, "_SUCCESS")
+      assert(marker.exists() == writes)
+      val mtime = marker.lastModified()
+      // same content → same path, no rewrite (the _SUCCESS marker is untouched)
+      assert(build(vecs) == p1)
+      assert(marker.lastModified() == mtime, "unchanged corpus must not rebuild the layout")
+      // mutated content (one vector dropped) → different fingerprint → new path
+      val p3 = build(mutated)
+      assert(p3 != p1, "a mutated corpus must get a fresh layout, never stale probes")
+      assert(new java.io.File(p3, "_SUCCESS").exists() == writes)
+    }}
+    val memos: Seq[(String, org.apache.spark.sql.DataFrame => AnyRef)] = Seq(
+      "buildIvfCached" -> (Ann.buildIvfCached(spark, _, "fp-spec", nCells = 8, maxIter = 2)._1),
+      "trainPqCodebooksCached" ->
+        (Ann.trainPqCodebooksCached(_, "fp-spec", m = 8, dsub = 8, kStar = 8, maxIter = 3)),
+      "trainPqCodebooksResidualCached" -> (Ann.trainPqCodebooksResidualCached(
+        _, "fp-spec", centroids, m = 8, dsub = 8, kStar = 8, maxIter = 3)),
+      "trainLocalPqCodebooksCached" -> (Ann.trainLocalPqCodebooksCached(
+        _, "fp-spec", centroids, m = 8, dsub = 8, kStar = 4, maxIter = 2)))
+    memos.foreach { case (name, train) => withClue(s"$name: ") {
+      // reference-equal: a memo hit, no retraining
+      val v1 = train(vecs)
+      assert(train(vecs) eq v1, "same corpus + key must hit the memo")
+      assert(!(train(mutated) eq v1), "a mutated corpus must retrain, never serve stale parts")
+    }}
   }
 
   test("quantized rerank with full over-fetch equals exact float top-k") {
@@ -594,16 +631,8 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     val precision = sameCluster.sum / sameCluster.size
     assert(precision >= 0.8,
       s"trained-PQ retrieved cross-cluster neighbors: $precision same-cluster")
-    // cache: identical corpus under the same key returns the memoized
-    // books (reference-equal — no Lloyd rerun); a mutated corpus changes
-    // the content fingerprint and must retrain, never serve stale books
-    val k1 = Ann.trainPqCodebooksCached(vecs, "pq-spec", m = 4, dsub = 4, kStar = 8, maxIter = 3)
-    val k2 = Ann.trainPqCodebooksCached(vecs, "pq-spec", m = 4, dsub = 4, kStar = 8, maxIter = 3)
-    assert(k1 eq k2, "same corpus + key must hit the codebook memo")
-    val mutated = vecs.withColumn("embedding",
-      org.apache.spark.sql.functions.transform(col("embedding"), x => x * 2.0f))
-    val k3 = Ann.trainPqCodebooksCached(mutated, "pq-spec", m = 4, dsub = 4, kStar = 8, maxIter = 3)
-    assert(!(k3 eq k1), "mutated corpus must not be served stale codebooks")
+    // the codebook memo's staleness check is a row of the
+    // fingerprint-keyed staleness table
   }
 
   test("OPQ: orthogonal deterministic rotation, capacity-rebalance beats plain PQ") {
@@ -743,9 +772,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     val p2 = Ann.ivfPqLayout(spark, vecs, base, centroids, books)
     assert(p2 == p1)
     assert(marker.lastModified() == mtime, "unchanged corpus+index must not rebuild")
-    val p3 = Ann.ivfPqLayout(
-      spark, vecs.filter($"vec_id" =!= 0L), base, centroids, books)
-    assert(p3 != p1, "a mutated corpus must get a fresh layout")
+    // a mutated corpus: the ivfPqLayout row of the staleness table
     // retrained index (different books) under the SAME corpus → new path:
     // stale codes under new codebooks would score garbage distances
     val seedBooks = Ann.trainPqCodebooks(vecs, m = 8, dsub = 8, kStar = 8, maxIter = 0)
@@ -967,7 +994,8 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "rank", "vec_id", "adc_dist")
         .as[(Long, Int, Long, Double)].collect().toSet
-    val joined = rows(Ann.ivfPqJoin(spark, dir, qs, centroids, books, k = 5, nProbe = 2))
+    val joined = rows(Ann.ivfPqJoin(spark, dir, qs, centroids, books, k = 5,
+      Ann.CellProbe.Nearest(nProbe = 2)))
     val driver = rows(Ann.ivfPqTopK(spark, dir, qs, centroids, books, k = 5, nProbe = 2))
     assert(joined == driver, "distributed join must equal the driver-side probe")
     assert(joined.nonEmpty)
@@ -986,7 +1014,8 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "rank", "vec_id", "sim")
         .as[(Long, Int, Long, Double)].collect().toSet
-    val joined = rows(Ann.ivfJoin(spark, dir, qs, centroids, k = 5, nProbe = 2))
+    val joined = rows(Ann.ivfJoin(spark, dir, qs, centroids, k = 5,
+      Ann.CellProbe.Nearest(nProbe = 2)))
     val driver = rows(Ann.ivfTopKPartitioned(spark, dir, qs, centroids, k = 5, nProbe = 2))
     val mem = rows(Ann.ivfTopK(qs, assigned, centroids, k = 5, nProbe = 2))
     assert(joined == driver, "distributed join must equal the driver-side layout probe")
@@ -997,14 +1026,15 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
   test("LSH join: distributed-queries form over the layout equals in-memory lshTopK") {
     val vecs = corpus.select("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("graft_lsh_join").toString
-    Ann.writeSignaturePartitioned(vecs, dir, nBits = 8)
+    val ball2 = Ann.LshProbe.Ball(nBits = 8, probeBits = 2)
+    Ann.writeSignaturePartitioned(vecs, dir, ball2)
     val qs = vecs.filter($"vec_id" < 50)
       .select($"vec_id".as("query_id"), $"embedding".as("q_embedding"))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "rank", "vec_id", "sim")
         .as[(Long, Int, Long, Double)].collect().toSet
-    val joined = rows(Ann.lshJoin(spark, dir, qs, k = 5, nBits = 8, probeBits = 2))
-    val mem = rows(Ann.lshTopK(qs, vecs, k = 5, nBits = 8, probeBits = 2))
+    val joined = rows(Ann.lshJoin(spark, dir, qs, k = 5, ball2))
+    val mem = rows(Ann.lshTopK(qs, vecs, k = 5, ball2))
     assert(joined == mem, "LSH distributed join must equal the in-memory bucket probe")
     assert(joined.nonEmpty)
   }
@@ -1012,12 +1042,13 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
   test("lshJoin prunes the layout scan to the probed signatures (r16 next #6)") {
     val vecs = corpus.select("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("graft_lsh_prune").toString
-    Ann.writeSignaturePartitioned(vecs, dir, nBits = 8)
+    val ball1 = Ann.LshProbe.Ball(nBits = 8, probeBits = 1)
+    Ann.writeSignaturePartitioned(vecs, dir, ball1)
     // a FEW queries probe a few buckets — the clustered-probe case the
     // pruning exists for
     val qs = vecs.filter($"vec_id" < 3)
       .select($"vec_id".as("query_id"), $"embedding".as("q_embedding"))
-    val pruned = Ann.lshJoin(spark, dir, qs, k = 5, nBits = 8, probeBits = 1)
+    val pruned = Ann.lshJoin(spark, dir, qs, k = 5, ball1)
     val leaves = pruned.queryExecution.executedPlan
       .collectLeaves().map(_.toString).mkString
     // a genuine per-value IN/INSET on the partition column, not just the
@@ -1031,8 +1062,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "rank", "vec_id", "sim")
         .as[(Long, Int, Long, Double)].collect().toSet
-    val full = rows(Ann.lshJoin(spark, dir, qs, k = 5, nBits = 8, probeBits = 1,
-      pruneBits = -1))
+    val full = rows(Ann.lshJoin(spark, dir, qs, k = 5, ball1, prune = false))
     assert(rows(pruned) == full,
       "pruned scan must return exactly the full-layout join's rows")
     assert(full.nonEmpty)
@@ -1048,7 +1078,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     // isin; the diffuse case has its own test below)
     val qs = vecs.filter($"vec_id" < 1)
       .select($"vec_id".as("query_id"), $"embedding".as("q_embedding"))
-    val pruned = Ann.ivfJoin(spark, dir, qs, centroids, k = 5, nProbe = 2)
+    val pruned = Ann.ivfJoin(spark, dir, qs, centroids, k = 5, Ann.CellProbe.Nearest(nProbe = 2))
     val leaves = pruned.queryExecution.executedPlan
       .collectLeaves().map(_.toString).mkString
     val pfContents = "PartitionFilters: \\[([^\\]]*)\\]".r
@@ -1059,8 +1089,8 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "rank", "vec_id", "sim")
         .as[(Long, Int, Long, Double)].collect().toSet
-    val full = rows(Ann.ivfJoin(spark, dir, qs, centroids, k = 5, nProbe = 2,
-      pruneCells = false))
+    val full = rows(Ann.ivfJoin(spark, dir, qs, centroids, k = 5,
+      Ann.CellProbe.Nearest(nProbe = 2), prune = false))
     assert(rows(pruned) == full,
       "pruned scan must return exactly the full-layout join's rows")
     assert(full.nonEmpty)
@@ -1082,7 +1112,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     val probedCells = qs.collect().flatMap(r =>
       Ann.nearestCells(r.getSeq[Float](1), centroids, 6)).distinct
     assume(2 * probedCells.length >= 8, "fixture must be diffuse for this test")
-    val adaptive = Ann.ivfJoin(spark, dir, qs, centroids, k = 5, nProbe = 6)
+    val adaptive = Ann.ivfJoin(spark, dir, qs, centroids, k = 5, Ann.CellProbe.Nearest(nProbe = 6))
     val leaves = adaptive.queryExecution.executedPlan
       .collectLeaves().map(_.toString).mkString
     // non-vacuous check: the PartitionFilters list must carry NO STATIC
@@ -1097,8 +1127,8 @@ class AnnSpec extends AnyFunSuite with SparkTestSession {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "rank", "vec_id", "sim")
         .as[(Long, Int, Long, Double)].collect().toSet
-    val full = rows(Ann.ivfJoin(spark, dir, qs, centroids, k = 5, nProbe = 6,
-      pruneCells = false))
+    val full = rows(Ann.ivfJoin(spark, dir, qs, centroids, k = 5,
+      Ann.CellProbe.Nearest(nProbe = 6), prune = false))
     assert(rows(adaptive) == full, "adaptive cutoff must not change any row")
     assert(full.nonEmpty)
   }

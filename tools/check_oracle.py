@@ -1,11 +1,15 @@
 #!/usr/bin/env python3
 """Local emulation of the driver's DuckDB-oracle correctness gate.
 
-Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [namePrefix]
 
 Runs each oracle_sql.json entry in DuckDB over the same parquet tables and
 compares against the Spark parquet dumps written by graft.Verify:
 column names (sorted), row counts, and values (floats rounded).
+`namePrefix` mirrors graft.Verify's third argument: only queries whose name
+starts with it are checked. Every oracle entry under the prefix must have a
+Spark dump (a query that threw in Spark writes none, which counts as FAIL),
+and the check exits 1 when it compared no query at all.
 Dev-only tooling — the shipped Scala library does not depend on this.
 """
 import json
@@ -43,6 +47,7 @@ def normalize(df):
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
+    prefix = sys.argv[3] if len(sys.argv) > 3 else ""
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -52,8 +57,9 @@ def main():
         oracles = json.load(f)
 
     n_ok = n_fail = 0
-    all_queries = sorted(d for d in os.listdir(out_dir)
-                         if os.path.isdir(os.path.join(out_dir, d)))
+    dumped = {d for d in os.listdir(out_dir)
+              if os.path.isdir(os.path.join(out_dir, d))}
+    all_queries = sorted(n for n in dumped | set(oracles) if n.startswith(prefix))
     for name in all_queries:
         spark_df = load_spark(out_dir, name)
         if name not in oracles:
@@ -100,6 +106,9 @@ def main():
                         print(f"      col={c} row={i}: spark={s[c][i]!r} duck={d[c][i]!r} ({int(neq.sum())} diffs)")
             n_fail += 1
     print(f"\n{n_ok} OK, {n_fail} FAIL, {len(all_queries) - n_ok - n_fail} rows-only")
+    if n_ok + n_fail == 0:
+        print(f"no query compared under prefix '{prefix}'")
+        return 1
     return 1 if n_fail else 0
 
 
