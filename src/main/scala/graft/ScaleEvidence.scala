@@ -177,8 +177,8 @@ object ScaleEvidence {
       // Materialize before the two independent counts — without it the
       // whole hub-capped pipeline executes once per action and `sec`
       // would record ~2x the real cost next to uniform_sec.
-      val pairs = operators.Dedup.minHashLshPairsHubCapped(
-        skewed, maxBandSize = skewCap).localCheckpoint()
+      val pairs = operators.Dedup.minHashLshPairsPortable(
+        skewed, hubCap = Some(skewCap)).localCheckpoint()
       val hub = pairs.filter(col("doc_a") === 7L).count()
       val planted = pairs.filter(col("doc_b") === col("doc_a") + lit(nBase) &&
         col("doc_a") < nBase && pmod(col("doc_a"), lit(10L)) =!= 7L).count()
@@ -309,8 +309,8 @@ object ScaleEvidence {
         .write.mode("overwrite").parquet(lineIdxPath)
     }
     val (lineMismatch, tLineAdmit) = timed {
-      val inc = operators.Dedup.incrementalLineDedup(
-        batchLines, spark.read.parquet(lineIdxPath))
+      val inc = operators.Dedup.crossDocLineDedup(
+        batchLines, Some(spark.read.parquet(lineIdxPath)))
       val full = lineFull.filter(col("doc_id") >= cut)
         .select("doc_id", "n_lines", "n_kept", "cleaned_text")
       inc.exceptAll(full).count() + full.exceptAll(inc).count()
@@ -326,8 +326,8 @@ object ScaleEvidence {
         .write.mode("overwrite").parquet(gramIdxPath)
     }
     val (spanMismatch, tSpanAdmit) = timed {
-      val inc = operators.Dedup.incrementalSpanDedup(
-        batchSpans, spark.read.parquet(gramIdxPath), k = 5)
+      val inc = operators.Dedup.repeatedSpanDedup(
+        batchSpans, k = 5, corpusIndex = Some(spark.read.parquet(gramIdxPath)))
       val full = spanFull.filter(col("doc_id") >= cut)
         .select("doc_id", "n_toks", "n_kept", "cleaned_text")
       inc.exceptAll(full).count() + full.exceptAll(inc).count()
@@ -1407,7 +1407,7 @@ object ScaleEvidence {
         .otherwise(col("id") + bgHistN).as("k"),
       lit(-1L).as("payload"))
     val ((bgOut, bgStats), tBloomGate) = timed {
-      val r = operators.Dedup.bloomGateWithStats(bgHist, bgBatch, Seq("k"), fpp = 0.01)
+      val r = operators.Dedup.bloomGate(bgHist, bgBatch, Seq("k"), fpp = 0.01)
       (r._1.agg(count(lit(1)), coalesce(expr("bit_xor(xxhash64(k))"), lit(0L))).head(), r._2)
     }
     val (bgRef, tAntiJoin) = timed {

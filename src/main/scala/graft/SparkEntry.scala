@@ -48,6 +48,53 @@ object SparkEntry {
   }
 
   // ------------------------------------------------------------------ //
+  //  Dedup fixtures (shared by the registry bodies)                    //
+  // ------------------------------------------------------------------ //
+
+  /** The near-dup family's input slice: (doc_id, text) of docs < 200. */
+  private def dedupSlice(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir).filter(col("doc_id") < 200).select("doc_id", "text")
+
+  /** 30 planted copies of doc 0's text (ids 50000-50029): every band
+    * bucket of that text holds 31 docs, over the fixtures' hub cap 10.
+    * explode(sequence), not crossJoin(range): keeps the fixture expansion
+    * join-free (RegistryPlanAuditSpec forbids the BroadcastNestedLoopJoin
+    * a 1-row cross product plans as). */
+  private def hotCopies(base: DataFrame): DataFrame =
+    base.filter(col("doc_id") === 0)
+      .select(explode(sequence(lit(0L), lit(29L))).as("i"), col("text"))
+      .select((col("i") + lit(50000L)).as("doc_id"), col("text"))
+
+  /** `base` plus both verify-stage candidate classes of docs < 40:
+    * +30000 suffix near-copies and +40000 100-char rotations. */
+  private def withNearCopiesAndRotations(base: DataFrame): DataFrame = {
+    val nearCopies = base.filter(col("doc_id") < 40)
+      .select((col("doc_id") + 30000).as("doc_id"),
+        concat(col("text"), lit(" graft salt")).as("text"))
+    val rotations = base.filter(col("doc_id") < 40)
+      .select((col("doc_id") + 40000).as("doc_id"),
+        concat(substring(col("text"), 101, 1000000), lit(" "),
+          substring(col("text"), 1, 100)).as("text"))
+    base.unionByName(nearCopies).unionByName(rotations)
+  }
+
+  /** Line-dedup shape: a corpus-wide header, an optional banner, the
+    * doc's first 60 chars and a per-language footer, one per line. */
+  private def boilerplateLines(docs: DataFrame, banner: Option[String] = None): DataFrame =
+    docs.select(col("doc_id"),
+      concat_ws("\n", (Seq(lit("ALL RIGHTS RESERVED - STANDARD HEADER")) ++
+        banner.map(lit) ++
+        Seq(substring(col("text"), 1, 60), concat(lit("footer-"), col("lang")))): _*)
+        .as("text"))
+
+  /** Span-dedup shape: a shared 8-token preamble + the doc's first 120 chars. */
+  private def withPreamble(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      concat(
+        lit("shared licensed preamble common to every document here "),
+        substring(col("text"), 1, 120)).as("text"))
+
+  // ------------------------------------------------------------------ //
   //  Query registry                                                    //
   // ------------------------------------------------------------------ //
 
@@ -394,13 +441,9 @@ object SparkEntry {
       // fixture (30 planted copies of doc 0 over cap 10 — all three
       // portable-fingerprint bands go hot), same star semantics, same
       // full DuckDB replay of the decision chain.
-      val base = Tables.documents(s, dir)
-        .filter(col("doc_id") < 200).select("doc_id", "text")
-      val hotCopies = base.filter(col("doc_id") === 0)
-        .select(explode(sequence(lit(0L), lit(29L))).as("i"), col("text"))
-        .select((col("i") + lit(50000L)).as("doc_id"), col("text"))
-      Dedup.simHashPairsHubCapped(
-        base.unionByName(hotCopies), maxHamming = 2, maxBandSize = 10)
+      val base = dedupSlice(s, dir)
+      Dedup.simHashPairsBanded(
+        base.unionByName(hotCopies(base)), maxHamming = 2, hubCap = Some(10))
         .orderBy("doc_a", "doc_b")
     }),
 
@@ -412,16 +455,9 @@ object SparkEntry {
       // cold buckets stay byte-identical to dedup_minhash_lsh. The
       // oracle replays the whole thing: bucket sizes, hot set, hub
       // attach, star emission.
-      val base = Tables.documents(s, dir)
-        .filter(col("doc_id") < 200).select("doc_id", "text")
-      // explode(sequence), not crossJoin(range): keeps the fixture
-      // expansion join-free (RegistryPlanAuditSpec forbids the
-      // BroadcastNestedLoopJoin a 1-row cross product plans as)
-      val hotCopies = base.filter(col("doc_id") === 0)
-        .select(explode(sequence(lit(0L), lit(29L))).as("i"), col("text"))
-        .select((col("i") + lit(50000L)).as("doc_id"), col("text"))
-      Dedup.minHashLshPairsHubCapped(
-        base.unionByName(hotCopies), maxBandSize = 10)
+      val base = dedupSlice(s, dir)
+      Dedup.minHashLshPairsPortable(
+        base.unionByName(hotCopies(base)), hubCap = Some(10))
         .withColumn("est_jaccard", round(col("est_jaccard"), 6))
         .orderBy("doc_a", "doc_b")
     }),
@@ -437,17 +473,8 @@ object SparkEntry {
       // edit check REJECTS it: exactly the false-positive class a
       // set-based estimate cannot see, made visible in the output as
       // verified=false rows).
-      val base = Tables.documents(s, dir).filter(col("doc_id") < 200)
-        .select(col("doc_id"), col("text"))
-      val nearCopies = base.filter(col("doc_id") < 40)
-        .select((col("doc_id") + 30000).as("doc_id"),
-          concat(col("text"), lit(" graft salt")).as("text"))
-      val rotations = base.filter(col("doc_id") < 40)
-        .select((col("doc_id") + 40000).as("doc_id"),
-          concat(substring(col("text"), 101, 1000000), lit(" "),
-            substring(col("text"), 1, 100)).as("text"))
       Dedup.minHashVerifiedPairs(
-        base.unionByName(nearCopies).unionByName(rotations),
+        withNearCopiesAndRotations(dedupSlice(s, dir)),
         minAgreement = 0.25, minEditSim = 0.9)
         .withColumn("est_jaccard", round(col("est_jaccard"), 6))
         .orderBy("doc_a", "doc_b")
@@ -466,21 +493,10 @@ object SparkEntry {
       // a direct edit check (the operator's documented semantics). The
       // oracle replays the full decision chain: bucket sizes, hot set,
       // hub attach, star emission, then the edit verify.
-      val base = Tables.documents(s, dir).filter(col("doc_id") < 200)
-        .select(col("doc_id"), col("text"))
-      val nearCopies = base.filter(col("doc_id") < 40)
-        .select((col("doc_id") + 30000).as("doc_id"),
-          concat(col("text"), lit(" graft salt")).as("text"))
-      val rotations = base.filter(col("doc_id") < 40)
-        .select((col("doc_id") + 40000).as("doc_id"),
-          concat(substring(col("text"), 101, 1000000), lit(" "),
-            substring(col("text"), 1, 100)).as("text"))
-      val hotCopies = base.filter(col("doc_id") === 0)
-        .select(explode(sequence(lit(0L), lit(29L))).as("i"), col("text"))
-        .select((col("i") + lit(50000L)).as("doc_id"), col("text"))
-      Dedup.minHashVerifiedPairsHubCapped(
-        base.unionByName(nearCopies).unionByName(rotations).unionByName(hotCopies),
-        minAgreement = 0.25, minEditSim = 0.9, maxBandSize = 10)
+      val base = dedupSlice(s, dir)
+      Dedup.minHashVerifiedPairs(
+        withNearCopiesAndRotations(base).unionByName(hotCopies(base)),
+        minAgreement = 0.25, minEditSim = 0.9, hubCap = Some(10))
         .withColumn("est_jaccard", round(col("est_jaccard"), 6))
         .orderBy("doc_a", "doc_b")
     }),
@@ -504,13 +520,8 @@ object SparkEntry {
       // first doc), a per-language footer (survives once per language),
       // and each doc's own content line. Dedup.crossDocLineDedup strips
       // every later copy and reassembles documents in original order.
-      val docs = Tables.documents(s, dir).filter(col("doc_id") < 100)
-        .select(col("doc_id"),
-          concat_ws("\n",
-            lit("ALL RIGHTS RESERVED - STANDARD HEADER"),
-            substring(col("text"), 1, 60),
-            concat(lit("footer-"), col("lang"))).as("text"))
-      Dedup.crossDocLineDedup(docs)
+      Dedup.crossDocLineDedup(
+          boilerplateLines(Tables.documents(s, dir).filter(col("doc_id") < 100)))
         .select("doc_id", "n_lines", "n_kept", "cleaned_text")
         .orderBy("doc_id")
     }),
@@ -522,20 +533,11 @@ object SparkEntry {
       // corpus header/footers strip via the index; the banner survives
       // only in the first batch doc; per-doc content survives.
       val base = Tables.documents(s, dir)
-      val corpus = base.filter(col("doc_id") < 100)
-        .select(col("doc_id"),
-          concat_ws("\n",
-            lit("ALL RIGHTS RESERVED - STANDARD HEADER"),
-            substring(col("text"), 1, 60),
-            concat(lit("footer-"), col("lang"))).as("text"))
-      val batch = base.filter(col("doc_id") >= 100 && col("doc_id") < 200)
-        .select(col("doc_id"),
-          concat_ws("\n",
-            lit("ALL RIGHTS RESERVED - STANDARD HEADER"),
-            lit("DAILY BATCH BANNER"),
-            substring(col("text"), 1, 60),
-            concat(lit("footer-"), col("lang"))).as("text"))
-      Dedup.incrementalLineDedup(batch, Dedup.lineIndex(corpus))
+      val corpus = boilerplateLines(base.filter(col("doc_id") < 100))
+      val batch = boilerplateLines(
+        base.filter(col("doc_id") >= 100 && col("doc_id") < 200),
+        banner = Some("DAILY BATCH BANNER"))
+      Dedup.crossDocLineDedup(batch, Some(Dedup.lineIndex(corpus)))
         .select("doc_id", "n_lines", "n_kept", "cleaned_text")
         .orderBy("doc_id")
     }),
@@ -549,12 +551,8 @@ object SparkEntry {
       // occurrences. Windows spanning preamble→content differ per doc,
       // so removals taper at the boundary — the standard span-dedup
       // edge behavior, exercised deliberately.
-      val docs = Tables.documents(s, dir).filter(col("doc_id") < 100)
-        .select(col("doc_id"),
-          concat(
-            lit("shared licensed preamble common to every document here "),
-            substring(col("text"), 1, 120)).as("text"))
-      Dedup.repeatedSpanDedup(docs, k = 4)
+      Dedup.repeatedSpanDedup(
+          withPreamble(Tables.documents(s, dir).filter(col("doc_id") < 100)), k = 4)
         .select("doc_id", "n_toks", "n_kept", "cleaned_text")
         .orderBy("doc_id")
     }),
@@ -566,14 +564,10 @@ object SparkEntry {
       // windows (taper at content boundaries); duplicated real-text
       // passages strip against corpus AND earlier batch docs.
       val base = Tables.documents(s, dir)
-      def shaped(lo: Long, hi: Long) = base
-        .filter(col("doc_id") >= lo && col("doc_id") < hi)
-        .select(col("doc_id"),
-          concat(
-            lit("shared licensed preamble common to every document here "),
-            substring(col("text"), 1, 120)).as("text"))
-      Dedup.incrementalSpanDedup(
-          shaped(100, 200), Dedup.gramIndex(shaped(0, 100), k = 4), k = 4)
+      def shaped(lo: Long, hi: Long) =
+        withPreamble(base.filter(col("doc_id") >= lo && col("doc_id") < hi))
+      Dedup.repeatedSpanDedup(shaped(100, 200), k = 4,
+          corpusIndex = Some(Dedup.gramIndex(shaped(0, 100), k = 4)))
         .select("doc_id", "n_toks", "n_kept", "cleaned_text")
         .orderBy("doc_id")
     }),
@@ -605,7 +599,7 @@ object SparkEntry {
       val batch = li.filter(
         col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1997-07-01").cast("timestamp"))
-      val (out, st) = Dedup.bloomGateWithStats(
+      val (out, st) = Dedup.bloomGate(
         history, batch, Seq("l_partkey", "l_suppkey"), fpp = 0.01)
       // Scale-free pruning invariant: candidates beyond the TRUE dups
       // must stay inside the fpp regime (3x margin + a small-sample
@@ -3480,6 +3474,154 @@ object SparkEntry {
     }
   }
 
+  /** Shared CTE chain of the portable MinHash mirror
+    * ([[graft.functions.TextAnalysis.minHashSignaturePortable]] over word
+    * 3-shingles, 16 slots, 4 bands of 4): tokenize `source` (a relation
+    * with doc_id and text, optionally with its WHERE) → shingles →
+    * hashMod → the 16 affine mod-p minima → one row per band. Ends with
+    * CTE `bd2` (doc_id, sig, b, band); callers append their tail. One
+    * generator feeds every MinHash oracle so the signature cannot drift.
+    */
+  private def minHashChainSql(source: String): String =
+    s"""t AS (
+       |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\\p{L}\\p{N}]+'), x -> x <> '') AS toks
+       |  FROM $source),
+       |sh AS (
+       |  SELECT doc_id,
+       |    CASE WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
+       |         WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
+       |         ELSE list_transform(range(len(toks) - 2),
+       |           i -> toks[CAST(i+1 AS INT)] || ' ' || toks[CAST(i+2 AS INT)] || ' ' || toks[CAST(i+3 AS INT)]) END AS shingles
+       |  FROM t),
+       |hs AS (
+       |  SELECT doc_id,
+       |    list_transform(shingles, s ->
+       |      list_reduce(
+       |        list_prepend(CAST(7 AS BIGINT),
+       |          list_transform(range(length(s)), i -> CAST(unicode(s[CAST(i+1 AS INT)]) AS BIGINT))),
+       |        (a, b) -> (31 * a + b) % 2147483647)) AS hashes
+       |  FROM sh),
+       |sg AS (
+       |  SELECT doc_id,
+       |    list_transform(range(16), k -> coalesce(
+       |      list_min(list_transform(hashes,
+       |        h -> ((48271 * (k + 1)) % 2147483647 * h + (16807 * (k + 1) + 11) % 2147483647) % 2147483647)),
+       |      2147483647)) AS sig
+       |  FROM hs),
+       |bd AS (
+       |  SELECT doc_id, sig, unnest(range(4)) AS b FROM sg),
+       |bd2 AS (
+       |  SELECT doc_id, sig, b, sig[CAST(4*b+1 AS INT):CAST(4*b+4 AS INT)] AS band FROM bd)""".stripMargin
+
+  /** Signature agreement of candidate columns sig_a/sig_b: the MinHash
+    * estimate of Jaccard, as Dedup's `sigAgreement` computes it. */
+  private def sigAgreementSql: String =
+    "CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0"
+
+  /** The whole banded MinHash-LSH pair oracle over `source`: the chain,
+    * distinct band-sharing pairs, agreement >= 0.5. */
+  private def minHashLshOracleSql(source: String): String =
+    s"""WITH ${minHashChainSql(source)},
+       |cand AS (
+       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, a.sig AS sig_a, b.sig AS sig_b
+       |  FROM bd2 a JOIN bd2 b ON a.b = b.b AND a.band = b.band AND a.doc_id < b.doc_id)
+       |SELECT doc_a, doc_b,
+       |  round($sigAgreementSql, 6) AS est_jaccard
+       |FROM cand
+       |WHERE $sigAgreementSql >= 0.5
+       |ORDER BY doc_a, doc_b""".stripMargin
+
+  /** Shared CTE chain of the portable 31-bit SimHash mirror
+    * ([[graft.functions.TextAnalysis.simHashMod]]) over `source`:
+    * tokenize → uni+bigram features → hashMod → per-bit majority. Ends
+    * with CTE `sm` (doc_id, simhash). */
+  private def simHashChainSql(source: String): String =
+    s"""t AS (
+       |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\\p{L}\\p{N}]+'), x -> x <> '') AS toks
+       |  FROM $source),
+       |f AS (
+       |  SELECT doc_id, list_concat(toks,
+       |    CASE WHEN len(toks) > 1 THEN list_transform(range(len(toks) - 1),
+       |      i -> toks[CAST(i+1 AS INT)] || '_' || toks[CAST(i+2 AS INT)]) ELSE CAST([] AS VARCHAR[]) END) AS feats
+       |  FROM t),
+       |hs AS (
+       |  SELECT doc_id,
+       |    list_transform(feats, s ->
+       |      list_reduce(
+       |        list_prepend(CAST(7 AS BIGINT),
+       |          list_transform(range(length(s)), i -> CAST(unicode(s[CAST(i+1 AS INT)]) AS BIGINT))),
+       |        (a, b) -> (31 * a + b) % 2147483647)) AS hashes
+       |  FROM f),
+       |sm AS (
+       |  SELECT doc_id,
+       |    coalesce(list_sum(list_transform(range(31), b ->
+       |      CASE WHEN coalesce(list_sum(list_transform(hashes,
+       |             h -> ((h >> CAST(b AS INT)) & 1) * 2 - 1)), 0) > 0
+       |           THEN (CAST(1 AS BIGINT) << CAST(b AS INT)) ELSE 0 END)), 0) AS simhash
+       |  FROM hs)""".stripMargin
+
+  /** The hub-cap replay of Dedup's `candidatePairs` with `hubCap =
+    * Some(10)` over a (doc_id, `payload`, b, band) relation `rel`: bucket
+    * sizes, the > 10 hot set, the min-id hub with its payload, anti-joined
+    * cold all-pairs and star emission for hot buckets. Ends with CTE
+    * `cand` (doc_a, doc_b, `out`_a, `out`_b). */
+  private def hubStarSql(rel: String, payload: String, out: String): String =
+    s"""bsz AS (
+       |  SELECT b, band, count(*) AS n, min(doc_id) AS hub FROM $rel GROUP BY b, band),
+       |hot AS (SELECT b, band, hub FROM bsz WHERE n > 10),
+       |hub$payload AS (
+       |  SELECT h.b, h.band, h.hub, d.$payload AS hub_$payload
+       |  FROM hot h JOIN $rel d ON d.b = h.b AND d.band = h.band AND d.doc_id = h.hub),
+       |cold AS (
+       |  SELECT d.doc_id, d.$payload, d.b, d.band FROM $rel d
+       |  ANTI JOIN hot h ON d.b = h.b AND d.band = h.band),
+       |cand AS (
+       |  SELECT DISTINCT doc_a, doc_b, ${out}_a, ${out}_b FROM (
+       |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.$payload AS ${out}_a, b.$payload AS ${out}_b
+       |    FROM cold a JOIN cold b ON a.b = b.b AND a.band = b.band AND a.doc_id < b.doc_id
+       |    UNION ALL
+       |    SELECT h.hub AS doc_a, d.doc_id AS doc_b, h.hub_$payload AS ${out}_a, d.$payload AS ${out}_b
+       |    FROM $rel d JOIN hub$payload h ON d.b = h.b AND d.band = h.band
+       |    WHERE d.doc_id <> h.hub))""".stripMargin
+
+  /** The hub-cap fixtures' 30 planted copies of doc 0's text (a UNION ALL
+    * leg of an (doc_id, text) input). */
+  private def hotCopiesSql: String =
+    """SELECT 50000 + i AS doc_id,
+      |    (SELECT text FROM documents WHERE doc_id = 0) AS text
+      |  FROM range(30) t(i)""".stripMargin
+
+  /** The verified fixture: the doc_id < 200 slice, +30000 suffix
+    * near-copies and +40000 100-char rotations of docs < 40. */
+  private def verifiedInputSql: String =
+    """SELECT doc_id, text FROM documents WHERE doc_id < 200
+      |  UNION ALL
+      |  SELECT doc_id + 30000, text || ' graft salt' FROM documents WHERE doc_id < 40
+      |  UNION ALL
+      |  SELECT doc_id + 40000, substr(text, 101) || ' ' || substr(text, 1, 100)
+      |  FROM documents WHERE doc_id < 40""".stripMargin
+
+  /** Edit-verify tail of the two-stage oracles over CTEs `input` and
+    * `cand`: agreement >= 0.25, levenshtein edit_sim floor-scaled to 6 dp
+    * (Dedup's `verifyPairsByEdit`), verified = edit_sim >= 0.9. */
+  private def editVerifySql: String =
+    s"""agreed AS (
+       |  SELECT doc_a, doc_b,
+       |    $sigAgreementSql AS est_jaccard
+       |  FROM cand
+       |  WHERE $sigAgreementSql >= 0.25),
+       |scored AS (
+       |  SELECT g.doc_a, g.doc_b, g.est_jaccard,
+       |    floor((CASE WHEN greatest(length(ta.text), length(tb.text)) = 0 THEN 1.0
+       |           ELSE 1.0 - CAST(levenshtein(ta.text, tb.text) AS DOUBLE) /
+       |                CAST(greatest(length(ta.text), length(tb.text)) AS DOUBLE) END) * 1000000.0) / 1000000.0 AS edit_sim
+       |  FROM agreed g
+       |  JOIN input ta ON ta.doc_id = g.doc_a
+       |  JOIN input tb ON tb.doc_id = g.doc_b)
+       |SELECT doc_a, doc_b, round(est_jaccard, 6) AS est_jaccard, edit_sim,
+       |  (edit_sim >= 0.9) AS verified
+       |FROM scored ORDER BY doc_a, doc_b""".stripMargin
+
   /** Shared CTE chain deriving the murmur feature-hash embedding
     * ([[graft.functions.HashEmbedder]]) for each row of `baseRel`
     * (exposing `idCol` and string `txtCol`): tokenize → uni+bigram
@@ -5896,102 +6038,25 @@ object SparkEntry {
     // Portable MinHash (16 perms, 4 bands of 4): the banding is part of the
     // semantics, so the oracle reproduces candidate generation too — pairs
     // sharing at least one band, kept when signature agreement >= 0.5.
-    "dedup_minhash_lsh" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), x -> x <> '') AS toks
-        |  FROM documents WHERE doc_id < 200),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
-        |         WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |         ELSE list_transform(range(len(toks) - 2),
-        |           i -> toks[CAST(i+1 AS INT)] || ' ' || toks[CAST(i+2 AS INT)] || ' ' || toks[CAST(i+3 AS INT)]) END AS shingles
-        |  FROM t),
-        |hs AS (
-        |  SELECT doc_id,
-        |    list_transform(shingles, s ->
-        |      list_reduce(
-        |        list_prepend(CAST(7 AS BIGINT),
-        |          list_transform(range(length(s)), i -> CAST(unicode(s[CAST(i+1 AS INT)]) AS BIGINT))),
-        |        (a, b) -> (31 * a + b) % 2147483647)) AS hashes
-        |  FROM sh),
-        |sg AS (
-        |  SELECT doc_id,
-        |    list_transform(range(16), k -> coalesce(
-        |      list_min(list_transform(hashes,
-        |        h -> ((48271 * (k + 1)) % 2147483647 * h + (16807 * (k + 1) + 11) % 2147483647) % 2147483647)),
-        |      2147483647)) AS sig
-        |  FROM hs),
-        |bd AS (
-        |  SELECT doc_id, sig, unnest(range(4)) AS b FROM sg),
-        |bd2 AS (
-        |  SELECT doc_id, sig, b, sig[CAST(4*b+1 AS INT):CAST(4*b+4 AS INT)] AS band FROM bd),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, a.sig AS sig_a, b.sig AS sig_b
-        |  FROM bd2 a JOIN bd2 b ON a.b = b.b AND a.band = b.band AND a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b,
-        |  round(CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0, 6) AS est_jaccard
-        |FROM cand
-        |WHERE CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0 >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin,
+    "dedup_minhash_lsh" -> minHashLshOracleSql("documents WHERE doc_id < 200"),
 
     // The SimHash hub-cap mirror: the dedup_simhash portable-fingerprint
     // chain over the salted input, bands cut at bit offsets 0/10/20
     // (widths 10/10/11 — b*31/3 like the operator), then the shared
     // bucket-size -> hot-set -> hub-attach -> star-emission replay.
     "dedup_simhash_hubcap" ->
-      """WITH input AS (
+      s"""WITH input AS (
         |  SELECT doc_id, text FROM documents WHERE doc_id < 200
         |  UNION ALL
-        |  SELECT 50000 + i AS doc_id,
-        |    (SELECT text FROM documents WHERE doc_id = 0) AS text
-        |  FROM range(30) t0(i)),
-        |t AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), x -> x <> '') AS toks
-        |  FROM input),
-        |f AS (
-        |  SELECT doc_id, list_concat(toks,
-        |    CASE WHEN len(toks) > 1 THEN list_transform(range(len(toks) - 1),
-        |      i -> toks[CAST(i+1 AS INT)] || '_' || toks[CAST(i+2 AS INT)]) ELSE CAST([] AS VARCHAR[]) END) AS feats
-        |  FROM t),
-        |hs AS (
-        |  SELECT doc_id,
-        |    list_transform(feats, s ->
-        |      list_reduce(
-        |        list_prepend(CAST(7 AS BIGINT),
-        |          list_transform(range(length(s)), i -> CAST(unicode(s[CAST(i+1 AS INT)]) AS BIGINT))),
-        |        (a, b) -> (31 * a + b) % 2147483647)) AS hashes
-        |  FROM f),
-        |sm AS (
-        |  SELECT doc_id,
-        |    coalesce(list_sum(list_transform(range(31), b ->
-        |      CASE WHEN coalesce(list_sum(list_transform(hashes,
-        |             h -> ((h >> CAST(b AS INT)) & 1) * 2 - 1)), 0) > 0
-        |           THEN (CAST(1 AS BIGINT) << CAST(b AS INT)) ELSE 0 END)), 0) AS simhash
-        |  FROM hs),
+        |  $hotCopiesSql),
+        |${simHashChainSql("input")},
         |bd AS (
         |  SELECT doc_id, simhash, b,
         |    CASE b WHEN 0 THEN (simhash >> 0) & 1023
         |           WHEN 1 THEN (simhash >> 10) & 1023
         |           ELSE (simhash >> 20) & 2047 END AS band
         |  FROM sm, unnest(range(3)) AS t2(b)),
-        |bsz AS (
-        |  SELECT b, band, count(*) AS n, min(doc_id) AS hub FROM bd GROUP BY 1, 2),
-        |hot AS (SELECT b, band, hub FROM bsz WHERE n > 10),
-        |hubsig AS (
-        |  SELECT h.b, h.band, h.hub, d.simhash AS hub_sim
-        |  FROM hot h JOIN bd d ON d.b = h.b AND d.band = h.band AND d.doc_id = h.hub),
-        |cold AS (
-        |  SELECT d.doc_id, d.simhash, d.b, d.band FROM bd d
-        |  ANTI JOIN hot h ON d.b = h.b AND d.band = h.band),
-        |cand AS (
-        |  SELECT DISTINCT doc_a, doc_b, sim_a, sim_b FROM (
-        |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.simhash AS sim_a, b.simhash AS sim_b
-        |    FROM cold a JOIN cold b ON a.b = b.b AND a.band = b.band AND a.doc_id < b.doc_id
-        |    UNION ALL
-        |    SELECT h.hub AS doc_a, d.doc_id AS doc_b, h.hub_sim AS sim_a, d.simhash AS sim_b
-        |    FROM bd d JOIN hubsig h ON d.b = h.b AND d.band = h.band
-        |    WHERE d.doc_id <> h.hub))
+        |${hubStarSql("bd", "simhash", "sim")}
         |SELECT doc_a, doc_b, CAST(bit_count(xor(sim_a, sim_b)) AS INT) AS hamming
         |FROM cand
         |WHERE bit_count(xor(sim_a, sim_b)) <= 2
@@ -6000,65 +6065,19 @@ object SparkEntry {
     // The hub-capped chain: same portable signature/banding mirror, then
     // bucket sizes, the >cap hot set, the min-id hub with its signature,
     // anti-joined cold pairwise candidates, and star emission for hot
-    // buckets — replaying Dedup.minHashLshPairsHubCapped decision for
-    // decision on the 30-planted-copy fixture.
+    // buckets — replaying the hubCap decisions of
+    // Dedup.minHashLshPairsPortable on the 30-planted-copy fixture.
     "dedup_minhash_hubcap" ->
-      """WITH input AS (
+      s"""WITH input AS (
         |  SELECT doc_id, text FROM documents WHERE doc_id < 200
         |  UNION ALL
-        |  SELECT 50000 + i AS doc_id,
-        |    (SELECT text FROM documents WHERE doc_id = 0) AS text
-        |  FROM range(30) t(i)),
-        |t AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), x -> x <> '') AS toks
-        |  FROM input),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
-        |         WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |         ELSE list_transform(range(len(toks) - 2),
-        |           i -> toks[CAST(i+1 AS INT)] || ' ' || toks[CAST(i+2 AS INT)] || ' ' || toks[CAST(i+3 AS INT)]) END AS shingles
-        |  FROM t),
-        |hs AS (
-        |  SELECT doc_id,
-        |    list_transform(shingles, s ->
-        |      list_reduce(
-        |        list_prepend(CAST(7 AS BIGINT),
-        |          list_transform(range(length(s)), i -> CAST(unicode(s[CAST(i+1 AS INT)]) AS BIGINT))),
-        |        (a, b) -> (31 * a + b) % 2147483647)) AS hashes
-        |  FROM sh),
-        |sg AS (
-        |  SELECT doc_id,
-        |    list_transform(range(16), k -> coalesce(
-        |      list_min(list_transform(hashes,
-        |        h -> ((48271 * (k + 1)) % 2147483647 * h + (16807 * (k + 1) + 11) % 2147483647) % 2147483647)),
-        |      2147483647)) AS sig
-        |  FROM hs),
-        |bd AS (
-        |  SELECT doc_id, sig, unnest(range(4)) AS b FROM sg),
-        |bd2 AS (
-        |  SELECT doc_id, sig, b, sig[CAST(4*b+1 AS INT):CAST(4*b+4 AS INT)] AS band FROM bd),
-        |bsz AS (
-        |  SELECT b, band, count(*) AS n, min(doc_id) AS hub FROM bd2 GROUP BY b, band),
-        |hot AS (SELECT b, band, hub FROM bsz WHERE n > 10),
-        |hubsig AS (
-        |  SELECT h.b, h.band, h.hub, d.sig AS hub_sig
-        |  FROM hot h JOIN bd2 d ON d.b = h.b AND d.band = h.band AND d.doc_id = h.hub),
-        |cold AS (
-        |  SELECT d.doc_id, d.sig, d.b, d.band FROM bd2 d
-        |  ANTI JOIN hot h ON d.b = h.b AND d.band = h.band),
-        |cand AS (
-        |  SELECT DISTINCT doc_a, doc_b, sig_a, sig_b FROM (
-        |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.sig AS sig_a, b.sig AS sig_b
-        |    FROM cold a JOIN cold b ON a.b = b.b AND a.band = b.band AND a.doc_id < b.doc_id
-        |    UNION ALL
-        |    SELECT h.hub AS doc_a, d.doc_id AS doc_b, h.hub_sig AS sig_a, d.sig AS sig_b
-        |    FROM bd2 d JOIN hubsig h ON d.b = h.b AND d.band = h.band
-        |    WHERE d.doc_id <> h.hub))
+        |  $hotCopiesSql),
+        |${minHashChainSql("input")},
+        |${hubStarSql("bd2", "sig", "sig")}
         |SELECT doc_a, doc_b,
-        |  round(CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0, 6) AS est_jaccard
+        |  round($sigAgreementSql, 6) AS est_jaccard
         |FROM cand
-        |WHERE CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0 >= 0.5
+        |WHERE $sigAgreementSql >= 0.5
         |ORDER BY doc_a, doc_b""".stripMargin,
 
     // Two-stage near-dup: the same portable-MinHash chain at the LOOSE
@@ -6067,61 +6086,13 @@ object SparkEntry {
     // levenshtein mirrors Spark's builtin, and edit_sim replays
     // floorScale (floor(x*1e6)/1e6) so the float hashes bit-match.
     "dedup_minhash_verified" ->
-      """WITH input AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id < 200
-        |  UNION ALL
-        |  SELECT doc_id + 30000, text || ' graft salt' FROM documents WHERE doc_id < 40
-        |  UNION ALL
-        |  SELECT doc_id + 40000, substr(text, 101) || ' ' || substr(text, 1, 100)
-        |  FROM documents WHERE doc_id < 40),
-        |t AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), x -> x <> '') AS toks
-        |  FROM input),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
-        |         WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |         ELSE list_transform(range(len(toks) - 2),
-        |           i -> toks[CAST(i+1 AS INT)] || ' ' || toks[CAST(i+2 AS INT)] || ' ' || toks[CAST(i+3 AS INT)]) END AS shingles
-        |  FROM t),
-        |hs AS (
-        |  SELECT doc_id,
-        |    list_transform(shingles, s ->
-        |      list_reduce(
-        |        list_prepend(CAST(7 AS BIGINT),
-        |          list_transform(range(length(s)), i -> CAST(unicode(s[CAST(i+1 AS INT)]) AS BIGINT))),
-        |        (a, b) -> (31 * a + b) % 2147483647)) AS hashes
-        |  FROM sh),
-        |sg AS (
-        |  SELECT doc_id,
-        |    list_transform(range(16), k -> coalesce(
-        |      list_min(list_transform(hashes,
-        |        h -> ((48271 * (k + 1)) % 2147483647 * h + (16807 * (k + 1) + 11) % 2147483647) % 2147483647)),
-        |      2147483647)) AS sig
-        |  FROM hs),
-        |bd AS (
-        |  SELECT doc_id, sig, unnest(range(4)) AS b FROM sg),
-        |bd2 AS (
-        |  SELECT doc_id, sig, b, sig[CAST(4*b+1 AS INT):CAST(4*b+4 AS INT)] AS band FROM bd),
+      s"""WITH input AS (
+        |  $verifiedInputSql),
+        |${minHashChainSql("input")},
         |cand AS (
         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, a.sig AS sig_a, b.sig AS sig_b
         |  FROM bd2 a JOIN bd2 b ON a.b = b.b AND a.band = b.band AND a.doc_id < b.doc_id),
-        |agreed AS (
-        |  SELECT doc_a, doc_b,
-        |    CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0 AS est_jaccard
-        |  FROM cand
-        |  WHERE CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0 >= 0.25),
-        |scored AS (
-        |  SELECT g.doc_a, g.doc_b, g.est_jaccard,
-        |    floor((CASE WHEN greatest(length(ta.text), length(tb.text)) = 0 THEN 1.0
-        |           ELSE 1.0 - CAST(levenshtein(ta.text, tb.text) AS DOUBLE) /
-        |                CAST(greatest(length(ta.text), length(tb.text)) AS DOUBLE) END) * 1000000.0) / 1000000.0 AS edit_sim
-        |  FROM agreed g
-        |  JOIN input ta ON ta.doc_id = g.doc_a
-        |  JOIN input tb ON tb.doc_id = g.doc_b)
-        |SELECT doc_a, doc_b, round(est_jaccard, 6) AS est_jaccard, edit_sim,
-        |  (edit_sim >= 0.9) AS verified
-        |FROM scored ORDER BY doc_a, doc_b""".stripMargin,
+        |$editVerifySql""".stripMargin,
 
     // Hub-capped two-stage near-dup: the dedup_minhash_hubcap decision
     // chain (bucket sizes -> hot set -> hub attach -> star emission ->
@@ -6129,79 +6100,13 @@ object SparkEntry {
     // fixture + 30 hot copies, then the dedup_minhash_verified edit
     // tail (levenshtein + floorScale) over the capped candidate set.
     "dedup_minhash_verified_hubcap" ->
-      """WITH input AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id < 200
+      s"""WITH input AS (
+        |  $verifiedInputSql
         |  UNION ALL
-        |  SELECT doc_id + 30000, text || ' graft salt' FROM documents WHERE doc_id < 40
-        |  UNION ALL
-        |  SELECT doc_id + 40000, substr(text, 101) || ' ' || substr(text, 1, 100)
-        |  FROM documents WHERE doc_id < 40
-        |  UNION ALL
-        |  SELECT 50000 + i AS doc_id,
-        |    (SELECT text FROM documents WHERE doc_id = 0) AS text
-        |  FROM range(30) t(i)),
-        |t AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), x -> x <> '') AS toks
-        |  FROM input),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
-        |         WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |         ELSE list_transform(range(len(toks) - 2),
-        |           i -> toks[CAST(i+1 AS INT)] || ' ' || toks[CAST(i+2 AS INT)] || ' ' || toks[CAST(i+3 AS INT)]) END AS shingles
-        |  FROM t),
-        |hs AS (
-        |  SELECT doc_id,
-        |    list_transform(shingles, s ->
-        |      list_reduce(
-        |        list_prepend(CAST(7 AS BIGINT),
-        |          list_transform(range(length(s)), i -> CAST(unicode(s[CAST(i+1 AS INT)]) AS BIGINT))),
-        |        (a, b) -> (31 * a + b) % 2147483647)) AS hashes
-        |  FROM sh),
-        |sg AS (
-        |  SELECT doc_id,
-        |    list_transform(range(16), k -> coalesce(
-        |      list_min(list_transform(hashes,
-        |        h -> ((48271 * (k + 1)) % 2147483647 * h + (16807 * (k + 1) + 11) % 2147483647) % 2147483647)),
-        |      2147483647)) AS sig
-        |  FROM hs),
-        |bd AS (
-        |  SELECT doc_id, sig, unnest(range(4)) AS b FROM sg),
-        |bd2 AS (
-        |  SELECT doc_id, sig, b, sig[CAST(4*b+1 AS INT):CAST(4*b+4 AS INT)] AS band FROM bd),
-        |bsz AS (
-        |  SELECT b, band, count(*) AS n, min(doc_id) AS hub FROM bd2 GROUP BY b, band),
-        |hot AS (SELECT b, band, hub FROM bsz WHERE n > 10),
-        |hubsig AS (
-        |  SELECT h.b, h.band, h.hub, d.sig AS hub_sig
-        |  FROM hot h JOIN bd2 d ON d.b = h.b AND d.band = h.band AND d.doc_id = h.hub),
-        |cold AS (
-        |  SELECT d.doc_id, d.sig, d.b, d.band FROM bd2 d
-        |  ANTI JOIN hot h ON d.b = h.b AND d.band = h.band),
-        |cand AS (
-        |  SELECT DISTINCT doc_a, doc_b, sig_a, sig_b FROM (
-        |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.sig AS sig_a, b.sig AS sig_b
-        |    FROM cold a JOIN cold b ON a.b = b.b AND a.band = b.band AND a.doc_id < b.doc_id
-        |    UNION ALL
-        |    SELECT h.hub AS doc_a, d.doc_id AS doc_b, h.hub_sig AS sig_a, d.sig AS sig_b
-        |    FROM bd2 d JOIN hubsig h ON d.b = h.b AND d.band = h.band
-        |    WHERE d.doc_id <> h.hub)),
-        |agreed AS (
-        |  SELECT doc_a, doc_b,
-        |    CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0 AS est_jaccard
-        |  FROM cand
-        |  WHERE CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0 >= 0.25),
-        |scored AS (
-        |  SELECT g.doc_a, g.doc_b, g.est_jaccard,
-        |    floor((CASE WHEN greatest(length(ta.text), length(tb.text)) = 0 THEN 1.0
-        |           ELSE 1.0 - CAST(levenshtein(ta.text, tb.text) AS DOUBLE) /
-        |                CAST(greatest(length(ta.text), length(tb.text)) AS DOUBLE) END) * 1000000.0) / 1000000.0 AS edit_sim
-        |  FROM agreed g
-        |  JOIN input ta ON ta.doc_id = g.doc_a
-        |  JOIN input tb ON tb.doc_id = g.doc_b)
-        |SELECT doc_a, doc_b, round(est_jaccard, 6) AS est_jaccard, edit_sim,
-        |  (edit_sim >= 0.9) AS verified
-        |FROM scored ORDER BY doc_a, doc_b""".stripMargin,
+        |  $hotCopiesSql),
+        |${minHashChainSql("input")},
+        |${hubStarSql("bd2", "sig", "sig")},
+        |$editVerifySql""".stripMargin,
 
     // Line ranks mirror the Spark window exactly (partition by line,
     // order by doc_id then position); reassembly via ORDER BY inside
@@ -6340,49 +6245,8 @@ object SparkEntry {
 
     // dedup_minhash_lsh without the doc_id cap: the identical portable
     // shingle→minhash→band chain over the ENTIRE documents table.
-    "dedup_minhash_full" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
-        |         WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |         ELSE list_transform(range(len(toks) - 2),
-        |           i -> toks[CAST(i+1 AS INT)] || ' ' || toks[CAST(i+2 AS INT)] || ' ' || toks[CAST(i+3 AS INT)]) END AS shingles
-        |  FROM t),
-        |hs AS (
-        |  SELECT doc_id,
-        |    list_transform(shingles, s ->
-        |      list_reduce(
-        |        list_prepend(CAST(7 AS BIGINT),
-        |          list_transform(range(length(s)), i -> CAST(unicode(s[CAST(i+1 AS INT)]) AS BIGINT))),
-        |        (a, b) -> (31 * a + b) % 2147483647)) AS hashes
-        |  FROM sh),
-        |sg AS (
-        |  SELECT doc_id,
-        |    list_transform(range(16), k -> coalesce(
-        |      list_min(list_transform(hashes,
-        |        h -> ((48271 * (k + 1)) % 2147483647 * h + (16807 * (k + 1) + 11) % 2147483647) % 2147483647)),
-        |      2147483647)) AS sig
-        |  FROM hs),
-        |bd AS (
-        |  SELECT doc_id, sig, unnest(range(4)) AS b FROM sg),
-        |bd2 AS (
-        |  SELECT doc_id, sig, b, sig[CAST(4*b+1 AS INT):CAST(4*b+4 AS INT)] AS band FROM bd),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, a.sig AS sig_a, b.sig AS sig_b
-        |  FROM bd2 a JOIN bd2 b ON a.b = b.b AND a.band = b.band AND a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b,
-        |  round(CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0, 6) AS est_jaccard
-        |FROM cand
-        |WHERE CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0 >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin,
+    "dedup_minhash_full" -> minHashLshOracleSql("documents"),
 
-    // Same portable MinHash signature machinery as dedup_minhash_lsh,
-    // split into a standing corpus (doc_id < 150) and a new batch
-    // (150-299): a batch doc is blocked by its smallest >=0.5-estimated-
-    // Jaccard match among corpus docs and lower-id batch siblings.
     "dedup_bloom_gate" ->
       """SELECT b.l_orderkey, b.l_linenumber, b.l_partkey, b.l_suppkey
         |FROM lineitem b
@@ -6394,36 +6258,12 @@ object SparkEntry {
         |      AND h.l_partkey = b.l_partkey AND h.l_suppkey = b.l_suppkey)
         |ORDER BY b.l_orderkey, b.l_linenumber, b.l_partkey, b.l_suppkey""".stripMargin,
 
+    // Same portable MinHash signature machinery as dedup_minhash_lsh,
+    // split into a standing corpus (doc_id < 150) and a new batch
+    // (150-299): a batch doc is blocked by its smallest >=0.5-estimated-
+    // Jaccard match among corpus docs and lower-id batch siblings.
     "dedup_incremental" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), x -> x <> '') AS toks
-        |  FROM documents WHERE doc_id < 300),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
-        |         WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |         ELSE list_transform(range(len(toks) - 2),
-        |           i -> toks[CAST(i+1 AS INT)] || ' ' || toks[CAST(i+2 AS INT)] || ' ' || toks[CAST(i+3 AS INT)]) END AS shingles
-        |  FROM t),
-        |hs AS (
-        |  SELECT doc_id,
-        |    list_transform(shingles, s ->
-        |      list_reduce(
-        |        list_prepend(CAST(7 AS BIGINT),
-        |          list_transform(range(length(s)), i -> CAST(unicode(s[CAST(i+1 AS INT)]) AS BIGINT))),
-        |        (a, b) -> (31 * a + b) % 2147483647)) AS hashes
-        |  FROM sh),
-        |sg AS (
-        |  SELECT doc_id,
-        |    list_transform(range(16), k -> coalesce(
-        |      list_min(list_transform(hashes,
-        |        h -> ((48271 * (k + 1)) % 2147483647 * h + (16807 * (k + 1) + 11) % 2147483647) % 2147483647)),
-        |      2147483647)) AS sig
-        |  FROM hs),
-        |bd AS (
-        |  SELECT doc_id, sig, unnest(range(4)) AS b FROM sg),
-        |bd2 AS (
-        |  SELECT doc_id, sig, b, sig[CAST(4*b+1 AS INT):CAST(4*b+4 AS INT)] AS band FROM bd),
+      s"""WITH ${minHashChainSql("documents WHERE doc_id < 300")},
         |corp AS (SELECT * FROM bd2 WHERE doc_id < 150),
         |batch AS (SELECT * FROM bd2 WHERE doc_id >= 150),
         |cand AS (
@@ -6434,7 +6274,7 @@ object SparkEntry {
         |  FROM batch a JOIN batch b2 ON a.b = b2.b AND a.band = b2.band AND a.doc_id < b2.doc_id),
         |blk AS (
         |  SELECT doc_id, min(blocker) AS blocked_by FROM cand
-        |  WHERE CAST(len(list_filter(range(16), i -> sig_a[CAST(i+1 AS INT)] = sig_b[CAST(i+1 AS INT)])) AS DOUBLE) / 16.0 >= 0.5
+        |  WHERE $sigAgreementSql >= 0.5
         |  GROUP BY doc_id)
         |SELECT d.doc_id, blk.blocked_by IS NULL AS admitted,
         |  CAST(coalesce(blk.blocked_by, -1) AS BIGINT) AS blocked_by
@@ -6445,29 +6285,7 @@ object SparkEntry {
     // Portable 31-bit SimHash, exact all-pairs form (doc_id < 200 keeps the
     // quadratic join bounded; the banded form is the scale path).
     "dedup_simhash" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^\p{L}\p{N}]+'), x -> x <> '') AS toks
-        |  FROM documents WHERE doc_id < 200),
-        |f AS (
-        |  SELECT doc_id, list_concat(toks,
-        |    CASE WHEN len(toks) > 1 THEN list_transform(range(len(toks) - 1),
-        |      i -> toks[CAST(i+1 AS INT)] || '_' || toks[CAST(i+2 AS INT)]) ELSE CAST([] AS VARCHAR[]) END) AS feats
-        |  FROM t),
-        |hs AS (
-        |  SELECT doc_id,
-        |    list_transform(feats, s ->
-        |      list_reduce(
-        |        list_prepend(CAST(7 AS BIGINT),
-        |          list_transform(range(length(s)), i -> CAST(unicode(s[CAST(i+1 AS INT)]) AS BIGINT))),
-        |        (a, b) -> (31 * a + b) % 2147483647)) AS hashes
-        |  FROM f),
-        |sm AS (
-        |  SELECT doc_id,
-        |    coalesce(list_sum(list_transform(range(31), b ->
-        |      CASE WHEN coalesce(list_sum(list_transform(hashes,
-        |             h -> ((h >> CAST(b AS INT)) & 1) * 2 - 1)), 0) > 0
-        |           THEN (CAST(1 AS BIGINT) << CAST(b AS INT)) ELSE 0 END)), 0) AS simhash
-        |  FROM hs)
+      s"""WITH ${simHashChainSql("documents WHERE doc_id < 200")}
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |  CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
         |FROM sm a JOIN sm b ON a.doc_id < b.doc_id

@@ -8,8 +8,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** xxhash64 of every lowercased, space-joined k-token window of a token
   * array — the per-window kernel of the span-dedup family
-  * ([[graft.operators.Dedup.repeatedSpanDedup]]/`gramIndex`/
-  * `incrementalSpanDedup`), fused. Replaces the composed form (kept as
+  * ([[graft.operators.Dedup.repeatedSpanDedup]] and `gramIndex`),
+  * fused. Replaces the composed form (kept as
   * `Dedup.gramHashesHof` for the equality spec)
   * `transform(sequence(0, n-k), i -> xxhash64(lower(array_join(slice(
   * toks, i+1, k), " "))))`, whose lambda evaluates interpreted per

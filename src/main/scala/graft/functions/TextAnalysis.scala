@@ -330,7 +330,8 @@ object TextAnalysis extends Serializable {
     * h -> (A_k·h + B_k) mod p with A_k = 48271(k+1) mod p,
     * B_k = (16807(k+1)+11) mod p (both derived, no constant table to keep
     * in sync with the oracle SQL). Exact same output in any 64-bit-integer
-    * engine; the murmur-based [[minHashSignature]] stays the scale default.
+    * engine — the one MinHash signature of the dedup operators
+    * ([[graft.operators.Dedup.minHashLshPairsPortable]] and its family).
     */
   def minHashSignaturePortable(shingles: Array[String], numHashes: Int): Array[Long] = {
     val sig = Array.fill(numHashes)(EmptySigSlot)
@@ -409,48 +410,6 @@ object TextAnalysis extends Serializable {
     val ts = HashEmbedder.tokens(text)
     if (ts.length < w) { if (ts.isEmpty) Array.empty else Array(ts.mkString(" ")) }
     else ts.sliding(w).map(_.mkString(" ")).toArray
-  }
-
-  // --------------------------------------------------------------- minhash
-  /** MinHash signature of a shingle set: `numHashes` permutations via the
-    * standard double-hashing construction h_k(s) = h1(s) + k·h2(s)
-    * (Kirsch-Mitzenmacher) — two murmur3 calls per shingle instead of
-    * `numHashes`, a ~32× hash-cost cut that matters when signatures run
-    * over billions of shingles. Same accuracy guarantees as independent
-    * hash functions for MinHash estimation.
-    */
-  def minHashSignature(shingles: Array[String], numHashes: Int): Array[Long] = {
-    val sig = Array.fill(numHashes)(Long.MaxValue)
-    var i = 0
-    while (i < shingles.length) {
-      val s = shingles(i)
-      val h1 = MurmurHash3.stringHash(s, 0x9E3779B9).toLong & 0xFFFFFFFFL
-      val h2 = (MurmurHash3.stringHash(s, 0x85EBCA6B).toLong & 0xFFFFFFFFL) | 1L // odd
-      var k = 0
-      while (k < numHashes) {
-        val h = (h1 + k * h2) & 0xFFFFFFFFL
-        if (h < sig(k)) sig(k) = h
-        k += 1
-      }
-      i += 1
-    }
-    sig
-  }
-
-  /** Band hashes for LSH banding of a MinHash signature:
-    * (bandIndex, hashOfBandRows). Docs sharing any band hash are candidates.
-    */
-  def bandHashes(sig: Array[Long], bands: Int): Array[(Int, Long)] = {
-    require(bands > 0 && bands <= sig.length && sig.length % bands == 0,
-      s"bands ($bands) must evenly divide the signature length (${sig.length}) — " +
-        "otherwise trailing rows are silently ignored or all bands collapse to a constant")
-    val rows = sig.length / bands
-    Array.tabulate(bands) { b =>
-      var h = 1469598103934665603L
-      var r = b * rows
-      while (r < (b + 1) * rows) { h = (h ^ sig(r)) * 1099511628211L; r += 1 }
-      (b, h)
-    }
   }
 
   // --------------------------------------------------------------- simhash

@@ -187,8 +187,8 @@ object Ann {
   /** Hot-key SALTED candidate equi-join — the skew guard of the
     * distributed ANN joins ([[ivfJoin]] / [[lshJoin]] / [[ivfPqJoin]]),
     * r16 verdict "What's missing" #1. The dedup families cap their
-    * Zipf-head buckets by CHANGING semantics (star pairs,
-    * [[Dedup.minHashLshPairsHubCapped]]); a top-k join cannot — every
+    * Zipf-head buckets by CHANGING semantics (star pairs, the `hubCap`
+    * of [[Dedup.minHashLshPairsPortable]]); a top-k join cannot — every
     * (query, candidate-in-probed-bucket) pair must be scored or recall
     * silently drops. So the guard redistributes instead of capping: a
     * key whose corpus occupancy exceeds `hotKeyCap` is split into
@@ -513,8 +513,8 @@ object Ann {
     *    6-dp-floored rerank cosine: every stage is exactly reproducible
     *    in ANSI SQL, so the WHOLE approximate path is hash-checked by the
     *    oracle (`ann_lsh_portable`, `ann_lsh_partitioned`) — the
-    *    verification twin of the murmur tier, the relationship
-    *    [[Dedup.minHashLshPairsPortable]] has to the murmur MinHash.
+    *    verification twin of the murmur tier, oracle-checked the way
+    *    [[Dedup.minHashLshPairsPortable]] is.
     *
     * A layout written under one probe serves every probe of the same
     * signature family and `nBits`.

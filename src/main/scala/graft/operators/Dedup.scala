@@ -4,8 +4,25 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{TextAnalysis, VectorOps}
 
-/** Deduplication suite for training-data pipelines: exact, MinHash-LSH,
-  * SimHash, exact n-gram Jaccard, and embedding-cosine near-dup.
+/** Deduplication suite for training-data pipelines: exact, line and span
+  * first-occurrence, shingle Jaccard/containment, MinHash-LSH, SimHash,
+  * Bloom-gated exact increments, and embedding-cosine near-dup.
+  *
+  * Each dedup decision is written once, in a private part the public
+  * operators share:
+  *  - `firstOccurrence` + `reassemble`: the global first (doc_id, pos) of
+  *    a line or k-gram hash, and the per-doc reassembly, of line and span
+  *    dedup. An optional standing index (`corpusIndex`) turns the batch
+  *    rule into its incremental form — one extra index join, nothing
+  *    corpus-sized re-processed.
+  *  - `bandPairs`: the band self-join every LSH family generates
+  *    candidates with; `candidatePairs` runs it all-pairs or, under a
+  *    `hubCap`, as a star to each hot bucket's min-id hub.
+  *  - `simHashBands`: the portable SimHash banding.
+  *  - `dfCapped`: the shingle document-frequency cap.
+  *  - `portableMinHash` + `bandKeys`: the portable MinHash signature and
+  *    its LSH band keys (also the streaming admission gate's).
+  *  - [[bloomGate]]: the Bloom gate and its outcome counters.
   *
   * Design for 100 TB: every variant avoids the naive O(n²) all-pairs
   * comparison — candidates are generated by equality joins on content
@@ -31,6 +48,59 @@ object Dedup {
       sequence(lit(0), size(toks) - k),
       i => xxhash64(lower(array_join(slice(toks, i + 1, lit(k)), " "))))
 
+  /** Lines of `textCol`, NULL text read as empty text. */
+  private def linesOf(textCol: String): Column =
+    split(coalesce(col(textCol), lit("")), "\n")
+
+  /** Whitespace tokens of `textCol`, NULL text read as empty text. */
+  private def tokensOf(textCol: String): Column =
+    split(trim(coalesce(col(textCol), lit(""))), "\\s+")
+
+  /** (doc_id, line_idx, line): one row per line, a NULL-text doc as one
+    * empty line — the line explode of [[crossDocLineDedup]] and of the
+    * streaming line gate ([[graft.streaming.Streams.lineDedupGate]]). */
+  private[graft] def lineRows(docs: DataFrame, textCol: String = "text"): DataFrame =
+    docs.select(col("doc_id"), posexplode(linesOf(textCol)).as(Seq("line_idx", "line")))
+
+  /** First-occurrence core of line and span dedup. Joins each (doc_id,
+    * `pos`, `key`) row to its key's global first occurrence
+    * `first = min(struct(doc_id, pos))` — a map-side-combinable partial
+    * aggregate plus join-back, never a window over the content key, so a
+    * boilerplate key with 10⁹ copies collapses to one row per map task
+    * and the join-back skew-splits under AQE. With a standing `index` of
+    * seen keys, rows also left-join it, flagging `in_corpus` = 1 for keys
+    * the corpus already holds. Returns the joined rows and the conjuncts
+    * of "this row is its key's first occurrence", which each caller
+    * combines with the index flag itself (line: keep = not in corpus AND
+    * first; span: covered = in corpus OR NOT first).
+    */
+  private def firstOccurrence(
+      rows: DataFrame, key: String, pos: String,
+      index: Option[DataFrame]): (DataFrame, Seq[Column]) = {
+    val firsts = rows.groupBy(key)
+      .agg(min(struct(col("doc_id"), col(pos))).as("first"))
+    val withIndex = index.fold(rows)(ix =>
+      rows.join(ix.distinct().withColumn("in_corpus", lit(1)), Seq(key), "left"))
+    (withIndex.join(firsts, key),
+      Seq(col("first.doc_id") === col("doc_id"), col(s"first.$pos") === col(pos)))
+  }
+
+  /** Per-doc reassembly tail of line and span dedup: (doc_id, `total`,
+    * n_kept, cleaned_text), the `kept` pieces joined by `sep` in `pos`
+    * order. A doc with nothing kept comes back with empty cleaned_text,
+    * not dropped (retention is a separate policy decision). */
+  private def reassemble(
+      rows: DataFrame, pos: String, piece: String, kept: Column,
+      sep: String, total: String): DataFrame =
+    rows.groupBy("doc_id").agg(
+      count(lit(1)).cast("long").as(total),
+      count(when(kept, 1)).cast("long").as("n_kept"),
+      array_join(
+        transform(
+          array_sort(collect_list(when(kept, struct(col(pos), col(piece))))),
+          s => s.getField(piece)),
+        sep).as("cleaned_text"))
+
   /** C4-style cross-document LINE dedup: a line that occurs in several
     * documents survives only at its first occurrence corpus-wide (min
     * (doc_id, line_idx)); every later copy is stripped. This is the rule
@@ -40,106 +110,44 @@ object Dedup {
     * three-sentence/line span level").
     *
     * Plan shape at 100 TB: explode to (line, doc_id, idx) keyed by
-    * xxhash64(line) — 8 bytes through every wire, never the line —
-    * pre-aggregate each key's global minimum occurrence with a
-    * map-side-combinable `min(struct(doc_id, idx))`, join the minima
-    * back, and one groupBy(doc_id) to reassemble in original order. No
-    * window, no pairwise comparison. The Zipfian boilerplate key (one
-    * cookie-banner line in 10⁹ documents) that would land a row_number
-    * window in a single task is harmless here: the partial aggregate
-    * collapses the hot key to one row PER MAP TASK before the shuffle,
-    * and the join-back is an equi-join AQE can skew-split (a window
-    * partition cannot be split; a join partition can). NULL text is
-    * treated as empty text, so fully-NULL docs still surface.
-    * Emits (doc_id, n_lines, n_kept, cleaned_text); documents whose
-    * every line was boilerplate come back with empty cleaned_text, not
-    * dropped (retention is a separate policy decision).
-    */
-  def crossDocLineDedup(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val lines = docs.select(
-      col("doc_id"),
-      posexplode(split(coalesce(col(textCol), lit("")), "\n"))
-        .as(Seq("line_idx", "line")))
-      .withColumn("line_h", xxhash64(col("line")))
-    // Global first occurrence per line: partial min(struct) combines
-    // map-side, so the shuffled volume is one row per (task, distinct
-    // line-hash) regardless of how hot any line is.
-    val firsts = lines.groupBy("line_h")
-      .agg(min(struct(col("doc_id"), col("line_idx"))).as("first"))
-    lines.join(firsts, "line_h")
-      .withColumn("keep",
-        col("first.doc_id") === col("doc_id") &&
-          col("first.line_idx") === col("line_idx"))
-      .groupBy("doc_id").agg(
-        count(lit(1)).cast("long").as("n_lines"),
-        count(when(col("keep"), 1)).cast("long").as("n_kept"),
-        array_join(
-          transform(
-            array_sort(collect_list(when(col("keep"),
-              struct(col("line_idx"), col("line"))))),
-            s => s.getField("line")),
-          "\n").as("cleaned_text"))
-  }
-
-  /** Standing line index for [[incrementalLineDedup]]: the distinct lines
-    * of a corpus. Materialize it once (parquet, bucketed by line hash at
-    * scale) and union each admitted batch's distinct lines back in — the
-    * same reusable-index lifecycle as [[admissionIndex]], at line
-    * granularity.
-    */
-  def lineIndex(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.select(explode(split(coalesce(col(textCol), lit("")), "\n")).as("line"))
-      .distinct()
-
-  /** Incremental (daily-crawl) form of [[crossDocLineDedup]]: a new batch
-    * is cleaned against a STANDING corpus line index instead of
-    * re-deduping the whole corpus. A batch line survives iff it is absent
-    * from the index AND it is the first occurrence within the batch —
-    * exactly what running the batch through the full corpus-wide rule
-    * would keep, without touching corpus documents again.
+    * xxhash64(line) — 8 bytes through every wire, never the line — then
+    * the shared first-occurrence core and one groupBy(doc_id) to
+    * reassemble in original order. No window, no pairwise comparison.
+    * NULL text is treated as empty text, so fully-NULL docs still
+    * surface. Emits (doc_id, n_lines, n_kept, cleaned_text).
     *
-    * Plan shape at 100 TB: the batch's lines left-join the index on
+    * Incremental (daily-crawl) form: pass the STANDING corpus line index
+    * ([[lineIndex]]) as `corpusIndex` and `docs` is cleaned as a new
+    * batch against it instead of re-deduping the whole corpus. A batch
+    * line survives iff it is absent from the index AND it is the first
+    * occurrence within the batch — exactly what running the batch
+    * through the corpus-wide rule would keep. The index joins on
     * xxhash64 of the line (an 8-byte equi-join key against a
-    * materialized table), plus the same map-side-combinable
-    * min(struct(doc_id, idx)) pre-aggregate + join-back as the
-    * batch-mode operator — no window over the content key anywhere, so
-    * a boilerplate line hot in the batch skew-splits under AQE instead
-    * of serializing one task. The corpus is represented only by its
-    * index; nothing corpus-sized shuffles per batch. After admission,
-    * the caller unions the batch's distinct lines into the index
-    * ([[lineIndex]] of the batch) — stripped copies included, since
+    * materialized table); nothing corpus-sized shuffles per batch. After
+    * admission, the caller unions the batch's distinct lines into the
+    * index ([[lineIndex]] of the batch) — stripped copies included, since
     * "seen once" is what the corpus-wide rule tracks.
     */
-  def incrementalLineDedup(
-      batch: DataFrame, corpusIndex: DataFrame,
+  def crossDocLineDedup(
+      docs: DataFrame, corpusIndex: Option[DataFrame] = None,
       textCol: String = "text"): DataFrame = {
-    val lines = batch.select(
-      col("doc_id"),
-      posexplode(split(coalesce(col(textCol), lit("")), "\n"))
-        .as(Seq("line_idx", "line")))
-      .withColumn("line_h", xxhash64(col("line")))
-    val idx = corpusIndex
-      .select(xxhash64(col("line")).as("line_h")).distinct()
-      .withColumn("in_corpus", lit(1))
-    val firsts = lines.groupBy("line_h")
-      .agg(min(struct(col("doc_id"), col("line_idx"))).as("first"))
-    lines.join(idx, Seq("line_h"), "left")
-      .join(firsts, "line_h")
-      .withColumn("keep",
-        col("in_corpus").isNull &&
-          col("first.doc_id") === col("doc_id") &&
-          col("first.line_idx") === col("line_idx"))
-      .groupBy("doc_id")
-      .agg(
-        count(lit(1)).cast("long").as("n_lines"),
-        count(when(col("keep"), 1)).cast("long").as("n_kept"),
-        array_join(
-          transform(
-            array_sort(collect_list(when(col("keep"),
-              struct(col("line_idx"), col("line"))))),
-            s => s.getField("line")),
-          "\n").as("cleaned_text"))
+    val lines = lineRows(docs, textCol).withColumn("line_h", xxhash64(col("line")))
+    val (marked, first) = firstOccurrence(lines, "line_h", "line_idx",
+      corpusIndex.map(_.select(xxhash64(col("line")).as("line_h"))))
+    val keep = (corpusIndex.map(_ => col("in_corpus").isNull).toSeq ++ first)
+      .reduce(_ && _)
+    reassemble(marked.withColumn("keep", keep),
+      "line_idx", "line", col("keep"), "\n", "n_lines")
   }
+
+  /** Standing line index for incremental [[crossDocLineDedup]]: the
+    * distinct lines of a corpus. Materialize it once (parquet, bucketed
+    * by line hash at scale) and union each admitted batch's distinct
+    * lines back in — the same reusable-index lifecycle as
+    * [[admissionIndex]], at line granularity.
+    */
+  def lineIndex(docs: DataFrame, textCol: String = "text"): DataFrame =
+    docs.select(explode(linesOf(textCol)).as("line")).distinct()
 
   /** Span-level repeated-substring dedup ("deduplicating training data"
     * style, at word granularity): any k-token window that occurred
@@ -161,23 +169,23 @@ object Dedup {
     * carrying only (doc_id, start, xxhash64(gram)) — never the document
     * and never the k-word string, so the wire cost per window is 8
     * bytes instead of ~k× the corpus text. First occurrences come from
-    * a map-side-combinable min(struct(doc_id, start)) per gram hash +
-    * join-back, NOT a rank window: a boilerplate gram with 10⁹ copies
-    * collapses to one row per map task in the partial aggregate, and
-    * the join-back partition is AQE-skew-splittable where a window
-    * partition is not. Duplicated windows explode into covered token
-    * positions, and one groupBy(doc_id) reassembles. No pairwise
-    * comparison anywhere. NULL text is treated as empty text.
-    * Emits (doc_id, n_toks, n_kept, cleaned_text); a document that is
-    * entirely a later copy comes back with empty cleaned_text, not
-    * dropped.
+    * the shared first-occurrence core; duplicated windows explode into
+    * covered token positions, and one groupBy(doc_id) reassembles. No
+    * pairwise comparison anywhere. NULL text is treated as empty text.
+    * Emits (doc_id, n_toks, n_kept, cleaned_text).
+    *
+    * Incremental (daily-crawl) form: with the STANDING corpus gram index
+    * ([[gramIndex]]) as `corpusIndex`, a batch window is duplicated iff
+    * its gram is in the index OR occurred earlier in the batch — exactly
+    * what the corpus-wide rule would decide, without re-windowing corpus
+    * documents. The index joins on the 8-byte `gram_h`; after admission
+    * the caller unions [[gramIndex]] of the batch into the index.
     */
   def repeatedSpanDedup(
-      docs: DataFrame, k: Int = 5, textCol: String = "text"): DataFrame = {
+      docs: DataFrame, k: Int = 5, corpusIndex: Option[DataFrame] = None,
+      textCol: String = "text"): DataFrame = {
     require(k >= 2, "window length k must be at least 2 tokens")
-    val toks = docs.select(
-      col("doc_id"),
-      split(trim(coalesce(col(textCol), lit(""))), "\\s+").as("toks"))
+    val toks = docs.select(col("doc_id"), tokensOf(textCol).as("toks"))
     // one row per k-token window: (doc_id, start, hashed lowercased gram)
     val wins = toks
       .filter(size(col("toks")) >= k)
@@ -185,103 +193,35 @@ object Dedup {
         col("doc_id"),
         posexplode(gramHashes(col("toks"), k))
           .as(Seq("start", "gram_h")))
-    val firsts = wins.groupBy("gram_h")
-      .agg(min(struct(col("doc_id"), col("start"))).as("first"))
-    val covered = wins.join(firsts, "gram_h")
-      .filter(!(col("first.doc_id") === col("doc_id") &&
-        col("first.start") === col("start")))
+    val (marked, first) = firstOccurrence(wins, "gram_h", "start",
+      corpusIndex.map(_.select(col("gram_h"))))
+    val repeat = !first.reduce(_ && _)
+    val covered = marked
+      .filter(corpusIndex.fold(repeat)(_ => col("in_corpus").isNotNull || repeat))
       .select(
         col("doc_id"),
         explode(sequence(col("start"), col("start") + (k - 1))).as("tok_idx"))
       .distinct()
     val tokRows = toks.select(
       col("doc_id"), posexplode(col("toks")).as(Seq("tok_idx", "tok")))
-    tokRows
-      .join(covered.withColumn("cov", lit(1)), Seq("doc_id", "tok_idx"), "left")
-      .groupBy("doc_id")
-      .agg(
-        count(lit(1)).cast("long").as("n_toks"),
-        count(when(col("cov").isNull, 1)).cast("long").as("n_kept"),
-        array_join(
-          transform(
-            array_sort(collect_list(when(col("cov").isNull,
-              struct(col("tok_idx"), col("tok"))))),
-            s => s.getField("tok")),
-          " ").as("cleaned_text"))
+    reassemble(
+      tokRows.join(covered.withColumn("cov", lit(1)), Seq("doc_id", "tok_idx"), "left"),
+      "tok_idx", "tok", col("cov").isNull, " ", "n_toks")
   }
 
-  /** Standing k-gram index for [[incrementalSpanDedup]]: one `gram_h` =
-    * xxhash64 of each distinct lowercased k-token window of a corpus —
-    * 8 bytes per entry, never the k-word string, so a 100 TB corpus
-    * index is ~corpus-token-count × 8 bytes rather than k× the corpus
-    * text. Same materialize-once, union-batches-in lifecycle as
+  /** Standing k-gram index for incremental [[repeatedSpanDedup]]: one
+    * `gram_h` = xxhash64 of each distinct lowercased k-token window of a
+    * corpus — 8 bytes per entry, never the k-word string, so a 100 TB
+    * corpus index is ~corpus-token-count × 8 bytes rather than k× the
+    * corpus text. Same materialize-once, union-batches-in lifecycle as
     * [[lineIndex]].
     */
   def gramIndex(docs: DataFrame, k: Int, textCol: String = "text"): DataFrame =
     docs
-      .select(split(trim(coalesce(col(textCol), lit(""))), "\\s+").as("toks"))
+      .select(tokensOf(textCol).as("toks"))
       .filter(size(col("toks")) >= k)
       .select(explode(gramHashes(col("toks"), k)).as("gram_h"))
       .distinct()
-
-  /** Incremental (daily-crawl) form of [[repeatedSpanDedup]]: the new
-    * batch's k-token windows are checked against a STANDING corpus gram
-    * index plus the within-batch first-occurrence rank, so a batch
-    * window is duplicated iff its gram is in the index OR occurred
-    * earlier in the batch — exactly what the corpus-wide rule would
-    * decide, without re-windowing corpus documents. Covered positions
-    * and per-doc reassembly are identical to the batch operator.
-    *
-    * Plan shape at 100 TB: batch windows equi-join the materialized
-    * hash index on the 8-byte `gram_h` key, plus the same map-side
-    * min(struct(doc_id, start)) pre-aggregate + join-back as the batch
-    * operator — no window over the content key; nothing corpus-sized
-    * moves per batch. After admission the caller unions [[gramIndex]]
-    * of the batch into the index.
-    */
-  def incrementalSpanDedup(
-      batch: DataFrame, corpusIndex: DataFrame, k: Int = 5,
-      textCol: String = "text"): DataFrame = {
-    require(k >= 2, "window length k must be at least 2 tokens")
-    val toks = batch.select(
-      col("doc_id"),
-      split(trim(coalesce(col(textCol), lit(""))), "\\s+").as("toks"))
-    val wins = toks
-      .filter(size(col("toks")) >= k)
-      .select(
-        col("doc_id"),
-        posexplode(gramHashes(col("toks"), k))
-          .as(Seq("start", "gram_h")))
-    val idx = corpusIndex
-      .select(col("gram_h")).distinct()
-      .withColumn("in_corpus", lit(1))
-    val firsts = wins.groupBy("gram_h")
-      .agg(min(struct(col("doc_id"), col("start"))).as("first"))
-    val covered = wins
-      .join(idx, Seq("gram_h"), "left")
-      .join(firsts, "gram_h")
-      .filter(col("in_corpus").isNotNull ||
-        !(col("first.doc_id") === col("doc_id") &&
-          col("first.start") === col("start")))
-      .select(
-        col("doc_id"),
-        explode(sequence(col("start"), col("start") + (k - 1))).as("tok_idx"))
-      .distinct()
-    val tokRows = toks.select(
-      col("doc_id"), posexplode(col("toks")).as(Seq("tok_idx", "tok")))
-    tokRows
-      .join(covered.withColumn("cov", lit(1)), Seq("doc_id", "tok_idx"), "left")
-      .groupBy("doc_id")
-      .agg(
-        count(lit(1)).cast("long").as("n_toks"),
-        count(when(col("cov").isNull, 1)).cast("long").as("n_kept"),
-        array_join(
-          transform(
-            array_sort(collect_list(when(col("cov").isNull,
-              struct(col("tok_idx"), col("tok"))))),
-            s => s.getField("tok")),
-          " ").as("cleaned_text"))
-  }
 
   /** Exact dedup: canonical row per content hash = min doc_id (deterministic,
     * unlike dropDuplicates). One shuffle on the hash.
@@ -292,61 +232,49 @@ object Dedup {
       .groupBy("file_hash")
       .agg(min("doc_id").as("keep_doc_id"), count(lit(1)).as("copies"))
 
-  /** Exact char-n-gram Jaccard near-dup pairs with similarity >= threshold.
-    * Candidate generation via shingle inverted index (explode + equi-join),
-    * not cross-join: |A ∩ B| from the join, union by inclusion-exclusion.
-    *
-    * `maxDf` caps shingle document frequency: a shingle present in more
-    * than `maxDf` docs is dropped from the index BEFORE the self-join
-    * (standard stop-shingle practice). Without the cap one ubiquitous
-    * shingle — "the" in 3-grams — makes its inverted-index bucket the
-    * whole corpus and the within-bucket pair count quadratic; with it the
-    * join fan-out per shingle is bounded by maxDf² regardless of corpus
-    * size. Jaccard is computed over the capped shingle universe
-    * (denominator sizes count surviving shingles too), so the result is
-    * the exact Jaccard of the filtered feature space, not a biased
-    * estimate of the unfiltered one. The hot-shingle set is tiny by
-    * construction (few shingles can exceed a df cap), so the exclusion is
-    * a broadcast anti-join.
+  /** Document-frequency cap of a (…, shingle) stream: a shingle present in
+    * more than `maxDf` rows is dropped (standard stop-shingle practice;
+    * `Int.MaxValue` = no cap). The cap is a map-side-combinable count +
+    * BROADCAST anti-join of the hot set (shingles with df > maxDf — tiny
+    * by construction, since few shingles can exceed a df cap). A count
+    * window partitioned by the shingle would serialize a stop-shingle's
+    * whole posting list into one task — the Zipfian-key hazard the
+    * line/span first-occurrence core avoids; the partial aggregate
+    * collapses hot shingles map-side instead.
     */
+  private def dfCapped(sh: DataFrame, maxDf: Int): DataFrame =
+    if (maxDf == Int.MaxValue) sh
+    else {
+      val hot = sh.groupBy("shingle")
+        .agg(count(lit(1)).as("df"))
+        .filter(col("df") > maxDf)
+        .select("shingle")
+      sh.join(broadcast(hot), Seq("shingle"), "left_anti")
+    }
+
   /** df-capped distinct-shingle stream shared by the set-overlap dedup
     * family ([[ngramJaccardPairs]], [[containmentPairs]]).
     *
     * Parallelism floor (no-op at scale): shingling is the CPU-bound
-    * stage and must not ride a single scan split of a small file. The
-    * cap is a map-side-combinable count + BROADCAST anti-join of the
-    * hot set (shingles with df > maxDf — tiny by construction, since
-    * few shingles can exceed a df cap). The earlier form was a count
-    * window partitioned by the shingle, which serializes a
-    * stop-shingle's whole posting list into one task — the exact
-    * Zipfian-key hazard the line/span dedup rewrite removed; the
-    * partial aggregate collapses hot shingles map-side instead.
+    * stage and must not ride a single scan split of a small file.
     */
-  private def dfCappedShingles(docs: DataFrame, n: Int, maxDf: Int): DataFrame = {
+  private def dfCappedShingles(docs: DataFrame, n: Int, maxDf: Int): DataFrame =
     // Materialize the raw shingle stream ONCE (r18, guide §2.4): its
-    // consumers — the hot-set aggregation here plus [[shingleOverlap]]'s
-    // sizes/a/b branches — are structurally different subplans, so
-    // ReuseExchange cannot merge them and each branch re-ran the
-    // CPU-dominant charShingles explode over the corpus (three full
-    // shingling passes in the before plan of dedup_ngram_jaccard; five
-    // registry queries ride this path). The checkpointed frame is the
-    // narrow (doc_id, shingle) index — the same "materialize the dedup
-    // index once per corpus snapshot" shape bandedSignaturesPortable
-    // documents for 100 TB; the broadcast anti-join that re-derives the
-    // capped stream from it is map-side and re-runs cheaply per branch.
-    val sh0 = LoopCheckpoint.transient(Scale.parallelismFloor(docs).select(
+    // consumers — the hot-set aggregation of the df cap plus
+    // [[shingleOverlap]]'s sizes/a/b branches — are structurally
+    // different subplans, so ReuseExchange cannot merge them and each
+    // branch re-ran the CPU-dominant charShingles explode over the corpus
+    // (three full shingling passes in the before plan of
+    // dedup_ngram_jaccard; five registry queries ride this path). The
+    // checkpointed frame is the narrow (doc_id, shingle) index — the same
+    // "materialize the dedup index once per corpus snapshot" shape
+    // bandedSignaturesPortable documents for 100 TB; the broadcast
+    // anti-join that re-derives the capped stream from it is map-side and
+    // re-runs cheaply per branch.
+    dfCapped(LoopCheckpoint.transient(Scale.parallelismFloor(docs).select(
       col("doc_id"),
       explode(TextAnalysis.charShingles(col("text"), n)).as("shingle")),
-      eager = false)
-    if (maxDf == Int.MaxValue) sh0
-    else {
-      val hot = sh0.groupBy("shingle")
-        .agg(count(lit(1)).as("df"))
-        .filter(col("df") > maxDf)
-        .select("shingle")
-      sh0.join(broadcast(hot), Seq("shingle"), "left_anti")
-    }
-  }
+      eager = false), maxDf)
 
   /** Per-pair intersection counts + per-doc distinct-shingle sizes over
     * the df-capped index: (doc_a < doc_b, inter, size_a, size_b). */
@@ -361,6 +289,20 @@ object Dedup {
       .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_shingles", "size_b"), "doc_b")
   }
 
+  /** Exact char-n-gram Jaccard near-dup pairs with similarity >= threshold.
+    * Candidate generation via shingle inverted index (explode + equi-join),
+    * not cross-join: |A ∩ B| from the join, union by inclusion-exclusion.
+    *
+    * `maxDf` caps shingle document frequency: a shingle present in more
+    * than `maxDf` docs is dropped from the index BEFORE the self-join.
+    * Without the cap one ubiquitous shingle — "the" in 3-grams — makes
+    * its inverted-index bucket the whole corpus and the within-bucket
+    * pair count quadratic; with it the join fan-out per shingle is
+    * bounded by maxDf² regardless of corpus size. Jaccard is computed
+    * over the capped shingle universe (denominator sizes count surviving
+    * shingles too), so the result is the exact Jaccard of the filtered
+    * feature space, not a biased estimate of the unfiltered one.
+    */
   def ngramJaccardPairs(
       docs: DataFrame,
       n: Int,
@@ -399,77 +341,43 @@ object Dedup {
       .filter(greatest(col("cont_a_in_b"), col("cont_b_in_a")) >= threshold)
       .select("doc_a", "doc_b", "cont_a_in_b", "cont_b_in_a")
 
-  /** MinHash+LSH near-dup candidate pairs: shingle → signature → band
-    * hashes → equi-join on (band, hash) → distinct pairs, verified by
-    * estimated Jaccard (signature agreement) >= threshold.
-    */
-  def minHashLshPairs(
-      docs: DataFrame,
-      shingleWords: Int = 3,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      threshold: Double = 0.5): DataFrame = {
-    val sigUdf = udf { (text: String) =>
-      TextAnalysis.minHashSignature(TextAnalysis.wordShingles(text, shingleWords), numHashes)
-    }
-    val bandUdf = udf { (sig: Seq[Long]) =>
-      TextAnalysis.bandHashes(sig.toArray, bands).map { case (b, h) => s"${b}_$h" }
-    }
-    // Signature hashing is the CPU stage — parallelism floor, no-op at scale.
-    val signed = Scale.parallelismFloor(docs)
-      .select(col("doc_id"), sigUdf(col("text")).as("sig"))
-    val banded = signed.select(col("doc_id"), col("sig"), explode(bandUdf(col("sig"))).as("band"))
-    val a = banded.as("a"); val b = banded.as("b")
-    val cands = a.join(b, col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-      .dropDuplicates("doc_a", "doc_b")
-    val estJaccard = udf { (x: Seq[Long], y: Seq[Long]) =>
-      var agree = 0
-      var i = 0
-      while (i < x.length) { if (x(i) == y(i)) agree += 1; i += 1 }
-      agree.toDouble / x.length
-    }
-    cands
-      .withColumn("est_jaccard", estJaccard(col("sig_a"), col("sig_b")))
-      .filter(col("est_jaccard") >= threshold)
-      .select("doc_a", "doc_b", "est_jaccard")
+  /** Portable MinHash signature column of `text`
+    * ([[TextAnalysis.minHashSignaturePortable]] over word
+    * `shingleWords`-shingles): every hash is exactly reproducible in ANSI
+    * SQL, so each operator built on it is oracle-checkable. */
+  private[graft] def portableMinHash(
+      text: Column, shingleWords: Int, numHashes: Int): Column =
+    udf { (t: String) =>
+      TextAnalysis.minHashSignaturePortable(
+        TextAnalysis.wordShingles(t, shingleWords), numHashes)
+    }.apply(text)
+
+  /** The `bands` LSH band keys of a `numHashes`-slot signature column:
+    * key b = "b_s1_..._sr" over slots [b·r, (b+1)·r) with r =
+    * numHashes / bands. Docs sharing any key are candidates. */
+  private[graft] def bandKeys(sig: Column, numHashes: Int, bands: Int): Seq[Column] = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    val rows = numHashes / bands
+    (0 until bands).map(b =>
+      concat_ws("_", (lit(b) +: (0 until rows).map(r =>
+        element_at(sig, b * rows + r + 1))): _*))
   }
 
-  /** [[minHashLshPairs]] with the portable mod-p signature
-    * ([[TextAnalysis.minHashSignaturePortable]]): identical join/banding
-    * shape (explode band keys → equi-join → distinct pairs → signature
-    * agreement), but every hash is exactly reproducible in ANSI SQL, so
-    * the whole operator — candidate generation included — is
-    * oracle-checkable. 16 hashes × 4 bands keeps the oracle SQL tractable;
-    * the murmur double-hashing variant remains the scale default.
-    */
-  /** (doc_id, sig, band) rows with the portable mod-p MinHash signature
-    * and one row per LSH band key — the shared index shape for the
-    * portable near-dup operators. At 100 TB this frame IS the dedup
-    * index: materialize it once per corpus snapshot (partitioned by
-    * band) and every later batch joins against it without re-shingling
-    * the corpus.
+  /** (doc_id, sig, band) rows with the portable MinHash signature and one
+    * row per LSH band key — the shared index shape for the portable
+    * near-dup operators. At 100 TB this frame IS the dedup index:
+    * materialize it once per corpus snapshot (partitioned by band) and
+    * every later batch joins against it without re-shingling the corpus.
     */
   private[graft] def bandedSignaturesPortable(
       docs: DataFrame,
       shingleWords: Int,
       numHashes: Int,
-      bands: Int): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    val sigUdf = udf { (text: String) =>
-      TextAnalysis.minHashSignaturePortable(
-        TextAnalysis.wordShingles(text, shingleWords), numHashes)
-    }
+      bands: Int): DataFrame =
     Scale.parallelismFloor(docs)
-      .select(col("doc_id"), sigUdf(col("text")).as("sig"))
+      .select(col("doc_id"), portableMinHash(col("text"), shingleWords, numHashes).as("sig"))
       .select(col("doc_id"), col("sig"),
-        explode(array((0 until bands).map(b =>
-          concat_ws("_", (lit(b) +: (0 until rows).map(r =>
-            element_at(col("sig"), b * rows + r + 1))): _*)): _*)).as("band"))
-  }
+        explode(array(bandKeys(col("sig"), numHashes, bands): _*)).as("band"))
 
   /** Fraction of signature positions on which `a` and `b` agree — the
     * MinHash estimate of Jaccard similarity.
@@ -477,6 +385,70 @@ object Dedup {
   private def sigAgreement(a: Column, b: Column, numHashes: Int): Column =
     size(filter(zip_with(a, b, (x, y) => x === y), v => v))
       .cast("double") / numHashes
+
+  /** The band self-join: every (doc_a < doc_b) pair sharing a band key of
+    * a (doc_id, `payload`, band) frame, carrying both payloads as
+    * `out`_a / `out`_b. A pair sharing m bands appears m times. */
+  private def bandPairs(banded: DataFrame, payload: String, out: String): DataFrame = {
+    val a = banded.as("a"); val b = banded.as("b")
+    a.join(b, col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
+      .select(
+        col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+        col(s"a.$payload").as(s"${out}_a"), col(s"b.$payload").as(s"${out}_b"))
+  }
+
+  /** Distinct candidate pairs of a (doc_id, `payload`, band) frame:
+    * (doc_a, doc_b, `out`_a, `out`_b).
+    *
+    * `hubCap = None`: all pairs within every band bucket.
+    *
+    * `hubCap = Some(n)`: the Zipf-head guard. A web corpus guarantees some
+    * boilerplate page duplicated 10⁵–10⁷ times, and all of its copies
+    * share every band key, so the within-bucket self-join is quadratic in
+    * the bucket (10⁵ copies → 5×10⁹ candidate pairs from ONE bucket).
+    * Buckets over `n` switch from all-pairs to STAR emission: every member
+    * pairs with the bucket's min-doc-id hub only — linear in the bucket,
+    * and exactly what the downstream clustering ([[duplicateClusters]])
+    * needs, since a star keeps the bucket connected. Cold buckets pair
+    * exactly like the uncapped form. Bucket sizes are ONE
+    * map-side-combinable aggregate (never a window over the bucket); the
+    * hot set is one row per hot bucket — bounded by the number of
+    * distinct hot TEXTS × bands, tiny next to the corpus — so both the
+    * cold anti-join and the hub attach broadcast, and a hot bucket's rows
+    * never shuffle on their shared key: the hub pairs are emitted
+    * map-side.
+    *
+    * Semantics trade (documented, deliberate): within a hot bucket,
+    * member↔member pairs are represented only through the hub. For true
+    * duplicate mass (the case that makes buckets hot) every member agrees
+    * with the hub and the cluster is identical; run [[exact]] dedup first
+    * if exact-copy mass should never reach the near-dup stage at all.
+    */
+  private def candidatePairs(
+      banded0: DataFrame, payload: String, out: String,
+      hubCap: Option[Int]): DataFrame = hubCap match {
+    case None => bandPairs(banded0, payload, out).dropDuplicates("doc_a", "doc_b")
+    case Some(cap) =>
+      // Materialize the banded frame ONCE: four distinct sub-plans consume
+      // it (sizes, hub attach, cold self-join both sides, hot star), and
+      // the broadcast joins block exchange reuse — unmaterialized, the
+      // hashing UDF stage (the CPU stage) would re-execute per consumer.
+      // Transient: a per-query frame must not write reliable-mode files
+      // nothing deletes.
+      val banded = LoopCheckpoint.transient(banded0)
+      val sizes = banded.groupBy("band")
+        .agg(count(lit(1)).as("n"), min(col("doc_id")).as("hub"))
+      val hot = sizes.filter(col("n") > cap).select("band", "hub")
+      val hubRow = banded.join(broadcast(hot), Seq("band"))
+        .filter(col("doc_id") === col("hub"))
+        .select(col("band"), col("hub"), col(payload).as("hub_payload"))
+      val cold = banded.join(broadcast(hot.select("band")), Seq("band"), "left_anti")
+      val hotPairs = banded.join(broadcast(hubRow), Seq("band"))
+        .filter(col("doc_id") =!= col("hub"))
+        .select(col("hub").as("doc_a"), col("doc_id").as("doc_b"),
+          col("hub_payload").as(s"${out}_a"), col(payload).as(s"${out}_b"))
+      bandPairs(cold, payload, out).unionByName(hotPairs).dropDuplicates("doc_a", "doc_b")
+  }
 
   /** (band, blocker) admission index over a standing corpus: one row per
     * LSH band key, carrying the smallest corpus doc id holding it. This
@@ -496,133 +468,26 @@ object Dedup {
     bandedSignaturesPortable(existing, shingleWords, numHashes, bands)
       .groupBy("band").agg(min(col("doc_id")).as("blocker"))
 
+  /** MinHash+LSH near-dup pairs over the portable mod-p signature
+    * (`portableMinHash`): explode band keys → band self-join → distinct
+    * pairs → signature agreement (estimated Jaccard) >= `threshold`.
+    * Every hash is exactly reproducible in ANSI SQL, so the whole
+    * operator — candidate generation included — is oracle-checkable.
+    * 16 hashes × 4 bands keeps the oracle SQL tractable. `hubCap` caps
+    * band buckets with a star to their min-id hub (see `candidatePairs`).
+    */
   def minHashLshPairsPortable(
       docs: DataFrame,
       shingleWords: Int = 3,
       numHashes: Int = 16,
       bands: Int = 4,
-      threshold: Double = 0.5): DataFrame = {
-    val banded = bandedSignaturesPortable(docs, shingleWords, numHashes, bands)
-    val a = banded.as("a"); val b = banded.as("b")
-    val cands = a.join(b, col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-      .dropDuplicates("doc_a", "doc_b")
-    cands
-      .withColumn("est_jaccard", sigAgreement(col("sig_a"), col("sig_b"), numHashes))
-      .filter(col("est_jaccard") >= threshold)
-      .select("doc_a", "doc_b", "est_jaccard")
-  }
-
-  /** [[minHashLshPairsPortable]] with HUB-CAPPED band buckets — the
-    * Zipf-head guard the plain pairwise form lacks: a web corpus
-    * guarantees some boilerplate page duplicated 10⁵–10⁷ times, and all
-    * of its copies share every band key, so the within-bucket self-join
-    * is quadratic in the bucket (10⁵ copies → 5×10⁹ candidate pairs
-    * from ONE bucket). Buckets over `maxBandSize` switch from all-pairs
-    * to STAR emission: every member pairs with the bucket's min-doc-id
-    * hub only — linear in the bucket, and exactly what the downstream
-    * clustering ([[duplicateClusters]]) needs, since a star keeps the
-    * bucket connected. Cold buckets are byte-identical to the uncapped
-    * operator.
-    *
-    * Scale shape: bucket sizes are ONE map-side-combinable aggregate
-    * (never a window over the bucket); the hot set is one row per hot
-    * (band, bucket) — bounded by the number of distinct hot TEXTS ×
-    * bands, the Zipf head, tiny next to the corpus — so both the
-    * anti-join (cold side) and the hub attach (hot side) broadcast, and
-    * the hot bucket's 10⁵ rows never shuffle on their shared key at
-    * all: the hub pairs are emitted map-side.
-    *
-    * Semantics trade (documented, deliberate): within a hot bucket,
-    * member↔member pairs that would have cleared the signature-agreement
-    * threshold are represented only through the hub. For true duplicate
-    * mass (the case that makes buckets hot) every member agrees with the
-    * hub and the cluster is identical; run [[exact]] dedup first if
-    * exact-copy mass should never reach the near-dup stage at all.
-    */
-  def minHashLshPairsHubCapped(
-      docs: DataFrame,
-      shingleWords: Int = 3,
-      numHashes: Int = 16,
-      bands: Int = 4,
       threshold: Double = 0.5,
-      maxBandSize: Int = 64): DataFrame =
-    hubCappedCandidates(
-      bandedSignaturesPortable(docs, shingleWords, numHashes, bands),
-      "sig", maxBandSize)
+      hubCap: Option[Int] = None): DataFrame =
+    candidatePairs(bandedSignaturesPortable(docs, shingleWords, numHashes, bands),
+      "sig", "sig", hubCap)
       .withColumn("est_jaccard", sigAgreement(col("sig_a"), col("sig_b"), numHashes))
       .filter(col("est_jaccard") >= threshold)
       .select("doc_a", "doc_b", "est_jaccard")
-
-  /** [[simHashPairsBanded]] under the same Zipf-head guard (see
-    * [[minHashLshPairsHubCapped]] — identical hazard: exact-duplicate
-    * mass shares every band, making the within-bucket self-join
-    * quadratic). Buckets over `maxBandSize` star to their min-id hub;
-    * the hamming verification applies to star pairs too, so true
-    * duplicate mass (hamming 0 to the hub) always survives. The
-    * pigeonhole EXACTNESS of the uncapped form holds for cold buckets
-    * only — the documented trade wherever a hub cap is active.
-    */
-  def simHashPairsHubCapped(
-      docs: DataFrame,
-      maxHamming: Int = 2,
-      maxBandSize: Int = 64): DataFrame = {
-    val nBands = maxHamming + 1
-    val hashed = docs.select(col("doc_id"), TextAnalysis.simHashModUdf(col("text")).as("simhash"))
-    val offsets = (0 to nBands).map(b => b * 31 / nBands)
-    val banded = hashed.select(
-      col("doc_id"), col("simhash"),
-      explode(array((0 until nBands).map { b =>
-        val width = offsets(b + 1) - offsets(b)
-        concat(lit(s"$b:"), shiftright(col("simhash"), offsets(b))
-          .bitwiseAND(lit((1L << width) - 1)).cast("string"))
-      }: _*)).as("band"))
-    hubCappedCandidates(banded, "simhash", maxBandSize)
-      .withColumn("hamming", TextAnalysis.hamming(col("simhash_a"), col("simhash_b")))
-      .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
-  }
-
-  /** Shared hub-capped candidate generation over a (doc_id, `payload`,
-    * band) frame: cold buckets pair all-vs-all exactly like the
-    * uncapped operators; buckets over `maxBandSize` emit one star pair
-    * per member against the bucket's min-doc-id hub. Bucket sizes are
-    * one map-side-combinable aggregate; the hot set (one row per hot
-    * bucket, bounded by the Zipf head) broadcasts into both the cold
-    * anti-join and the hub attach, so hot rows never shuffle on their
-    * shared key. Output: (doc_a, doc_b, `payload`_a, `payload`_b),
-    * deduplicated.
-    */
-  private def hubCappedCandidates(
-      banded0: DataFrame, payload: String, maxBandSize: Int): DataFrame = {
-    // Materialize the banded frame ONCE: four distinct sub-plans consume
-    // it (sizes, hub attach, cold self-join both sides, hot star), and
-    // the broadcast joins block exchange reuse — unmaterialized, the
-    // shingle+signature UDF stage (the CPU stage) would re-execute per
-    // consumer. Transient: a per-query frame must not write
-    // reliable-mode files nothing deletes.
-    val banded = LoopCheckpoint.transient(banded0)
-    val sizes = banded.groupBy("band")
-      .agg(count(lit(1)).as("n"), min(col("doc_id")).as("hub"))
-    val hot = sizes.filter(col("n") > maxBandSize).select("band", "hub")
-    val hubRow = banded.join(broadcast(hot), Seq("band"))
-      .filter(col("doc_id") === col("hub"))
-      .select(col("band"), col("hub"), col(payload).as("hub_payload"))
-    val cold = banded.join(broadcast(hot.select("band")), Seq("band"), "left_anti")
-    val a = cold.as("a"); val b = cold.as("b")
-    val coldPairs = a.join(b, col("a.band") === col("b.band") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col(s"a.$payload").as(s"${payload}_a"), col(s"b.$payload").as(s"${payload}_b"))
-    val hotPairs = banded.join(broadcast(hubRow), Seq("band"))
-      .filter(col("doc_id") =!= col("hub"))
-      .select(col("hub").as("doc_a"), col("doc_id").as("doc_b"),
-        col("hub_payload").as(s"${payload}_a"), col(payload).as(s"${payload}_b"))
-    coldPairs.unionByName(hotPairs).dropDuplicates("doc_a", "doc_b")
-  }
 
   /** LSH candidates VERIFIED by normalized edit similarity — the
     * standard two-stage near-dup pipeline (cheap probabilistic candidate
@@ -642,6 +507,20 @@ object Dedup {
     * id equi-joins. At 100 TB the candidate frame is the small side by
     * construction, exactly the property that makes two-stage dedup the
     * production standard.
+    *
+    * `hubCap`: without it one 10⁵-copy boilerplate bucket feeds 5×10⁹
+    * pairs into `levenshtein` (each O(len²)). With it, hot buckets emit
+    * one star pair per member against the min-id hub and only those
+    * star pairs are edit-verified — linear in the bucket. A leaf↔leaf
+    * pair inside a hot bucket is then never DIRECTLY edit-checked: it is
+    * claimed duplicate only via CLUSTER CLOSURE through verified hub
+    * edges (filter `verified`, then [[duplicateClusters]] /
+    * [[duplicateClustersStar]]). For true duplicate mass every member
+    * verifies against the hub and the closure equals the uncapped
+    * verdict; a hot bucket of merely-similar-to-hub texts can
+    * transitively claim leaf pairs whose direct edit similarity is below
+    * the floor (closure is one edit-radius wider than pairwise). Run
+    * [[exact]] dedup first where pairwise-exact verdicts matter.
     */
   def minHashVerifiedPairs(
       docs: DataFrame,
@@ -649,48 +528,10 @@ object Dedup {
       minEditSim: Double = 0.8,
       shingleWords: Int = 3,
       numHashes: Int = 16,
-      bands: Int = 4): DataFrame =
-    verifyPairsByEdit(
-      minHashLshPairsPortable(docs, shingleWords, numHashes, bands, minAgreement),
-      docs, minEditSim)
-
-  /** [[minHashVerifiedPairs]] with HUB-CAPPED candidate generation — the
-    * Zipf-head guard for the two-stage pipeline: the uncapped form feeds
-    * every within-bucket pair into edit verification, so one 10⁵-copy
-    * boilerplate bucket costs 5×10⁹ `levenshtein` calls (each O(len²))
-    * — the verification stage inherits exactly the quadratic bucket the
-    * hub cap exists to prevent, and pays STRING edit distance on it,
-    * far worse than the signature agreement the plain banded form pays.
-    * Candidates come from [[minHashLshPairsHubCapped]]: hot buckets emit
-    * one star pair per member against the min-id hub, and only those
-    * star pairs are edit-verified — linear in the bucket.
-    *
-    * SEMANTICS (the documented hub-cap trade, sharpened for the
-    * verified form): within a hot bucket, a leaf↔leaf pair is never
-    * DIRECTLY edit-checked — a leaf pair is claimed duplicate only via
-    * CLUSTER CLOSURE through verified hub edges (filter `verified`,
-    * then [[duplicateClusters]]/[[duplicateClustersStar]]: leaf−hub +
-    * hub−leaf edges connect the leaves transitively). For true
-    * duplicate mass — the case that makes buckets hot — every member
-    * verifies against the hub and the closure equals the uncapped
-    * verdict; a hot bucket of merely-similar-to-hub texts can
-    * transitively claim leaf pairs whose direct edit similarity is
-    * below the floor (closure is one edit-radius wider than pairwise).
-    * Callers needing pairwise-exact verdicts inside hot buckets should
-    * run [[exact]] dedup first so exact-copy mass never reaches the
-    * near-dup stage.
-    */
-  def minHashVerifiedPairsHubCapped(
-      docs: DataFrame,
-      minAgreement: Double = 0.25,
-      minEditSim: Double = 0.8,
-      shingleWords: Int = 3,
-      numHashes: Int = 16,
       bands: Int = 4,
-      maxBandSize: Int = 64): DataFrame =
+      hubCap: Option[Int] = None): DataFrame =
     verifyPairsByEdit(
-      minHashLshPairsHubCapped(
-        docs, shingleWords, numHashes, bands, minAgreement, maxBandSize),
+      minHashLshPairsPortable(docs, shingleWords, numHashes, bands, minAgreement, hubCap),
       docs, minEditSim)
 
   /** Shared verification tail of the two-stage pipelines: attach both
@@ -731,7 +572,7 @@ object Dedup {
     * parallelize.
     *
     * Scale shape: both sides reduce to (doc_id, sig, band) rows
-    * ([[bandedSignaturesPortable]] — for a standing corpus, materialize
+    * (`bandedSignaturesPortable` — for a standing corpus, materialize
     * that frame once as the dedup index); candidates come from band
     * equi-joins only (batch-vs-corpus and batch-vs-batch), so the
     * corpus is touched by one hash-partitioned join keyed on band, and
@@ -752,11 +593,10 @@ object Dedup {
       .join(corpus.as("o"), col("n.band") === col("o.band"))
       .select(col("n.doc_id").as("doc_id"), col("blocker"),
         col("n.sig").as("sig_a"), col("sig_b"))
-    val vsBatch = batch.as("a")
-      .join(batch.as("b"),
-        col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("b.doc_id").as("doc_id"), col("a.doc_id").as("blocker"),
-        col("b.sig").as("sig_a"), col("a.sig").as("sig_b"))
+    // the higher-id sibling is the one blocked
+    val vsBatch = bandPairs(batch, "sig", "sig")
+      .select(col("doc_b").as("doc_id"), col("doc_a").as("blocker"),
+        col("sig_b").as("sig_a"), col("sig_a").as("sig_b"))
     val blockers = vsCorpus.unionByName(vsBatch)
       .dropDuplicates("doc_id", "blocker")
       .filter(sigAgreement(col("sig_a"), col("sig_b"), numHashes) >= threshold)
@@ -769,7 +609,7 @@ object Dedup {
         coalesce(col("blocked_by"), lit(-1L)).as("blocked_by"))
   }
 
-  /** Outcome counters of one [[bloomGateWithStats]] run. Invariants:
+  /** Outcome counters of one [[bloomGate]] run. Invariants:
     * `bloomNegatives + candidates == batchRows` and
     * `confirmedDups + falsePositives == candidates`.
     */
@@ -799,6 +639,7 @@ object Dedup {
     * over the (tiny) candidate set — so unlike a raw Bloom gate the
     * result is exact, equal to `batch ANTI JOIN history` on `keyCols`
     * (null keys never match, the standard NOT-EXISTS semantics).
+    * Returns the admitted rows and the gate's outcome counters.
     *
     * Why this beats the plain anti-join at 100 TB: a shuffle anti-join
     * repartitions BOTH sides on the key — rewriting the full history
@@ -815,10 +656,14 @@ object Dedup {
     * back to a shuffle anti-join that still moves only the candidate
     * fraction of the batch.
     *
-    * The Bloom summary is built distributed (`stat.bloomFilter`, one
-    * aggregation pass over history's xxhash64 keys — the verify join
-    * compares the real columns, so 64-bit hash collisions cannot drop a
-    * genuinely-new row).
+    * The Bloom summary is built from history's xxhash64 keys by
+    * [[buildBloom]] (`BloomFilter.create` at the requested sizing +
+    * `treeAggregate`); the verify join compares the real columns, so
+    * 64-bit hash collisions cannot drop a genuinely-new row. The
+    * counters cost the history count (unless `expectedHistoryKeys` is
+    * given), one aggregation over the batch that yields both its size and
+    * the candidate count, and one count over the materialized candidate
+    * sliver; history is never shuffled.
     */
   def bloomGate(
       history: DataFrame,
@@ -826,35 +671,67 @@ object Dedup {
       keyCols: Seq[String],
       fpp: Double = 0.01,
       expectedHistoryKeys: Option[Long] = None,
-      maxBroadcastKeys: Long = 2000000L): DataFrame =
-    bloomGateImpl(history, batch, keyCols, fpp, expectedHistoryKeys,
-      maxBroadcastKeys)._1
-
-  /** [[bloomGate]] plus materialized outcome counters (costs one extra
-    * counting pass over the materialized candidate sliver; the batch and
-    * candidate counts ride the gate's own counting aggregation, and
-    * history is still never shuffled). */
-  def bloomGateWithStats(
-      history: DataFrame,
-      batch: DataFrame,
-      keyCols: Seq[String],
-      fpp: Double = 0.01,
-      expectedHistoryKeys: Option[Long] = None,
       maxBroadcastKeys: Long = 2000000L): (DataFrame, BloomGateStats) = {
-    val (out, nHist, nBatchThunk, nCand, candSurvivors, filterBits, expectedFpp) =
-      bloomGateImpl(history, batch, keyCols, fpp, expectedHistoryKeys,
-        maxBroadcastKeys)
-    val nFp = candSurvivors()
-    val nBatch = nBatchThunk()
-    (out, BloomGateStats(
-      historyRows = nHist,
-      batchRows = nBatch,
-      bloomNegatives = nBatch - nCand,
-      candidates = nCand,
-      confirmedDups = nCand - nFp,
-      falsePositives = nFp,
-      filterBits = filterBits,
-      expectedFpp = expectedFpp))
+    require(keyCols.nonEmpty, "bloomGate needs at least one key column")
+    // expectedHistoryKeys is a SIZING hint, never a correctness hinge:
+    // a stale Some(0) on a non-empty history must not skip dedup, so
+    // the empty-history shortcut is only taken on an actual count.
+    require(expectedHistoryKeys.forall(_ > 0),
+      "bloomGate: expectedHistoryKeys must be positive when provided " +
+        "(omit it to have history counted)")
+    val nHist = expectedHistoryKeys.getOrElse(history.count())
+    if (nHist == 0) {
+      val nBatch = batch.count()
+      (batch, BloomGateStats(0L, nBatch, nBatch, 0L, 0L, 0L, 0L, 0.0))
+    } else {
+      def keyH = xxhash64(keyCols.map(col): _*)
+      val bloom = buildBloom(history.select(keyH.as("_gate_h")), nHist, fpp)
+      require(bloom.expectedFpp() <= math.max(2 * fpp, 0.02),
+        f"bloomGate: built filter reports expectedFpp=${bloom.expectedFpp()}%.4f " +
+          f"against requested $fpp%.4f — sizing regressed")
+      val bcBloom = batch.sparkSession.sparkContext.broadcast(bloom)
+      val mightContain = udf((h: Long) => bcBloom.value.mightContainLong(h))
+      val withH = batch.withColumn("_gate_h", keyH)
+      val negatives = withH.filter(!mightContain(col("_gate_h"))).drop("_gate_h")
+      // The candidate sliver (true dups + ~fpp of the novel rows) is
+      // consumed by the verify join, the counters AND the output union —
+      // materialize it once (r18, guide §2.4) so only the negatives
+      // branch rescans the batch, instead of one batch scan + bloom probe
+      // per consumer. One aggregation yields BOTH the batch size and the
+      // candidate count.
+      val candidates = LoopCheckpoint.transient(
+        withH.filter(mightContain(col("_gate_h"))).drop("_gate_h"),
+        eager = false)
+      val batchCounts = withH.agg(
+        count(lit(1)).as("n"),
+        count(when(mightContain(col("_gate_h")), 1)).as("nc")).head()
+      val nBatch = batchCounts.getLong(0)
+      val nCand = batchCounts.getLong(1)
+      val survivors =
+        if (nCand == 0) candidates
+        else if (nCand <= maxBroadcastKeys) {
+          // No-shuffle verify: probe history by the broadcast candidate
+          // keys (map-side semi join over the history scan), then
+          // anti-join the broadcast hit set back onto the candidates.
+          val candKeys = candidates.select(keyCols.map(col): _*).distinct()
+          val hits = history.join(broadcast(candKeys), keyCols, "left_semi")
+            .select(keyCols.map(col): _*).distinct()
+          candidates.join(broadcast(hits), keyCols, "left_anti")
+        } else
+          // Candidate set too big to broadcast — shuffle anti-join, but
+          // only over the candidate fraction of the batch.
+          candidates.join(history.select(keyCols.map(col): _*), keyCols, "left_anti")
+      val nFp = survivors.count()
+      (negatives.unionByName(survivors), BloomGateStats(
+        historyRows = nHist,
+        batchRows = nBatch,
+        bloomNegatives = nBatch - nCand,
+        candidates = nCand,
+        confirmedDups = nCand - nFp,
+        falsePositives = nFp,
+        filterBits = bloom.bitSize(),
+        expectedFpp = bloom.expectedFpp()))
+    }
   }
 
   /** Distributed Bloom build at the REQUESTED sizing: `stat.bloomFilter`
@@ -875,76 +752,12 @@ object Dedup {
       (bf, v) => { bf.putLong(v); bf },
       (a, b) => { a.mergeInPlace(b); a })
 
-  private def bloomGateImpl(
-      history: DataFrame,
-      batch: DataFrame,
-      keyCols: Seq[String],
-      fpp: Double,
-      expectedHistoryKeys: Option[Long],
-      maxBroadcastKeys: Long)
-      : (DataFrame, Long, () => Long, Long, () => Long, Long, Double) = {
-    require(keyCols.nonEmpty, "bloomGate needs at least one key column")
-    // expectedHistoryKeys is a SIZING hint, never a correctness hinge:
-    // a stale Some(0) on a non-empty history must not skip dedup, so
-    // the empty-history shortcut is only taken on an actual count.
-    require(expectedHistoryKeys.forall(_ > 0),
-      "bloomGate: expectedHistoryKeys must be positive when provided " +
-        "(omit it to have history counted)")
-    val spark = batch.sparkSession
-    def keyH = xxhash64(keyCols.map(col): _*)
-    val nHist = expectedHistoryKeys.getOrElse(history.count())
-    // Batch count is LAZY (a thunk like candSurvivors): plain bloomGate
-    // discards it, and first-batch-against-empty-history is the common
-    // startup case — it must not pay a full batch scan for a number only
-    // bloomGateWithStats reads.
-    if (nHist == 0) return (batch, 0L, () => batch.count(), 0L, () => 0L, 0L, 0.0)
-    val bloom = buildBloom(history.select(keyH.as("_gate_h")), nHist, fpp)
-    require(bloom.expectedFpp() <= math.max(2 * fpp, 0.02),
-      f"bloomGate: built filter reports expectedFpp=${bloom.expectedFpp()}%.4f " +
-        f"against requested $fpp%.4f — sizing regressed")
-    val bcBloom = spark.sparkContext.broadcast(bloom)
-    val mightContain = udf((h: Long) => bcBloom.value.mightContainLong(h))
-    val withH = batch.withColumn("_gate_h", keyH)
-    val negatives = withH.filter(!mightContain(col("_gate_h"))).drop("_gate_h")
-    // The candidate sliver (true dups + ~fpp of the novel rows) is
-    // consumed by the verify join, the stats count AND the output union
-    // — materialize it once (r18, guide §2.4) so only the negatives
-    // branch rescans the batch, instead of one batch scan + bloom probe
-    // per consumer. One aggregation yields BOTH the batch size and the
-    // candidate count (the batch row count previously cost its own
-    // full scan in bloomGateWithStats).
-    val candidates = LoopCheckpoint.transient(
-      withH.filter(mightContain(col("_gate_h"))).drop("_gate_h"),
-      eager = false)
-    val batchCounts = withH.agg(
-      count(lit(1)).as("n"),
-      count(when(mightContain(col("_gate_h")), 1)).as("nc")).head()
-    val nBatch = batchCounts.getLong(0)
-    val nCand = batchCounts.getLong(1)
-    val survivors =
-      if (nCand == 0) candidates
-      else if (nCand <= maxBroadcastKeys) {
-        // No-shuffle verify: probe history by the broadcast candidate
-        // keys (map-side semi join over the history scan), then
-        // anti-join the broadcast hit set back onto the candidates.
-        val candKeys = candidates.select(keyCols.map(col): _*).distinct()
-        val hits = history.join(broadcast(candKeys), keyCols, "left_semi")
-          .select(keyCols.map(col): _*).distinct()
-        candidates.join(broadcast(hits), keyCols, "left_anti")
-      } else
-        // Candidate set too big to broadcast — shuffle anti-join, but
-        // only over the candidate fraction of the batch.
-        candidates.join(history.select(keyCols.map(col): _*), keyCols, "left_anti")
-    (negatives.unionByName(survivors), nHist, () => nBatch, nCand,
-      () => survivors.count(), bloom.bitSize(), bloom.expectedFpp())
-  }
-
   /** Exact SimHash near-dup pairs over the portable 31-bit fingerprint
     * ([[TextAnalysis.simHashMod]]): all pairs with Hamming distance <=
     * `maxHamming`, by native `bit_count(xor)` over a self-join. This exact
-    * form is the oracle; [[simHashPairs]] is the banded candidate-pruned
-    * form for scale (where the quadratic self-join is replaced by band
-    * equi-joins).
+    * form is the oracle; [[simHashPairsBanded]] is the banded
+    * candidate-pruned form for scale (where the quadratic self-join is
+    * replaced by band equi-joins).
     */
   def simHashPairsExact(docs: DataFrame, maxHamming: Int = 8): DataFrame = {
     val hashed = docs.select(col("doc_id"), TextAnalysis.simHashModUdf(col("text")).as("simhash"))
@@ -967,50 +780,51 @@ object Dedup {
       explode(array((0 until 4).map(b =>
         concat(lit(s"$b:"), (shiftright(col("simhash"), b * 16)
           .bitwiseAND(lit(0xFFFFL))).cast("string"))): _*)).as("band"))
-    val a = banded.as("a"); val b = banded.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.simhash").as("sim_a"), col("b.simhash").as("sim_b"))
-      .dropDuplicates("doc_a", "doc_b")
+    candidatePairs(banded, "simhash", "sim", None)
       .withColumn("hamming", TextAnalysis.hamming(col("sim_a"), col("sim_b")))
       .filter(col("hamming") <= maxHamming)
       .select("doc_a", "doc_b", "hamming")
   }
 
+  /** (doc_id, simhash, band): the portable 31-bit fingerprint cut into
+    * `maxHamming + 1` contiguous bands, band b covering bits
+    * [off(b), off(b+1)) with off(b) = b·31 / nBands — widths differ by
+    * at most 1. */
+  private def simHashBands(docs: DataFrame, maxHamming: Int): DataFrame = {
+    val nBands = maxHamming + 1
+    val offsets = (0 to nBands).map(b => b * 31 / nBands)
+    docs.select(col("doc_id"), TextAnalysis.simHashModUdf(col("text")).as("simhash"))
+      .select(
+        col("doc_id"), col("simhash"),
+        explode(array((0 until nBands).map { b =>
+          val width = offsets(b + 1) - offsets(b)
+          concat(lit(s"$b:"), shiftright(col("simhash"), offsets(b))
+            .bitwiseAND(lit((1L << width) - 1)).cast("string"))
+        }: _*)).as("band"))
+  }
+
   /** Banded SimHash near-dup pairs over the PORTABLE 31-bit fingerprint
     * ([[TextAnalysis.simHashMod]]) — the scale-registered form of
-    * [[simHashPairsExact]]. The 31 bits are cut into `maxHamming + 1`
-    * contiguous bands; by pigeonhole, any pair within Hamming distance
-    * `maxHamming` differs in at most `maxHamming` bands and therefore
-    * agrees on at least one, so the band equi-join generates EVERY
-    * qualifying pair: the result is provably identical to the exact
-    * all-pairs form (which stays as the oracle and the spec cross-check),
-    * while the plan is hash-partitioned equi-joins on short band keys —
-    * no O(n²) theta self-join.
+    * [[simHashPairsExact]]. By pigeonhole, any pair within Hamming
+    * distance `maxHamming` differs in at most `maxHamming` of the
+    * `maxHamming + 1` bands and therefore agrees on at least one, so the
+    * band equi-join generates EVERY qualifying pair: the result is
+    * provably identical to the exact all-pairs form (which stays as the
+    * oracle and the spec cross-check), while the plan is hash-partitioned
+    * equi-joins on short band keys — no O(n²) theta self-join.
+    *
+    * `hubCap` applies the Zipf-head guard of `candidatePairs`: buckets
+    * over the cap star to their min-id hub, and the Hamming verification
+    * applies to star pairs too, so true duplicate mass (Hamming 0 to the
+    * hub) always survives. Pigeonhole EXACTNESS then holds for cold
+    * buckets only — the documented trade wherever a hub cap is active.
     */
-  def simHashPairsBanded(docs: DataFrame, maxHamming: Int = 2): DataFrame = {
-    val nBands = maxHamming + 1
-    val hashed = docs.select(col("doc_id"), TextAnalysis.simHashModUdf(col("text")).as("simhash"))
-    // Band b covers bits [off(b), off(b+1)): widths differ by at most 1.
-    val offsets = (0 to nBands).map(b => b * 31 / nBands)
-    val banded = hashed.select(
-      col("doc_id"), col("simhash"),
-      explode(array((0 until nBands).map { b =>
-        val width = offsets(b + 1) - offsets(b)
-        concat(lit(s"$b:"), shiftright(col("simhash"), offsets(b))
-          .bitwiseAND(lit((1L << width) - 1)).cast("string"))
-      }: _*)).as("band"))
-    val a = banded.as("a"); val b = banded.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.simhash").as("sim_a"), col("b.simhash").as("sim_b"))
-      .dropDuplicates("doc_a", "doc_b")
+  def simHashPairsBanded(
+      docs: DataFrame, maxHamming: Int = 2, hubCap: Option[Int] = None): DataFrame =
+    candidatePairs(simHashBands(docs, maxHamming), "simhash", "sim", hubCap)
       .withColumn("hamming", TextAnalysis.hamming(col("sim_a"), col("sim_b")))
       .filter(col("hamming") <= maxHamming)
       .select("doc_a", "doc_b", "hamming")
-  }
 
   /** Benchmark-contamination check: documents sharing any `n`-word shingle
     * with a benchmark/eval set (the standard 13-gram decontamination rule
@@ -1029,27 +843,16 @@ object Dedup {
     // char shingles here; word shingles via wordShingles-UDF would be the
     // production 13-gram form — the join shape is identical. Corpus side
     // gets the parallelism floor (no-op at scale); the benchmark side is
-    // query-sized and isn't worth a shuffle.
-    val c0 = shingled(Scale.parallelismFloor(corpus), "doc_id")
-    // Same df cap as [[ngramJaccardPairs]], computed on the corpus side
-    // (a shingle common to >maxDf corpus docs carries no contamination
-    // signal and would fan the equi-join out quadratically; filtering the
-    // corpus index alone suffices — the inner join drops the bench side).
-    // Map-side-combinable count + broadcast anti-join of the tiny hot
-    // set, not a shingle-partitioned window (see [[ngramJaccardPairs]]).
-    val c =
-      if (maxDf == Int.MaxValue) c0
-      else {
-        val hot = c0.groupBy("shingle")
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") > maxDf)
-          .select("shingle")
-        c0.join(broadcast(hot), Seq("shingle"), "left_anti")
-      }
-    c.join(shingled(benchmark, "bench_id"), "shingle")
+    // query-sized and isn't worth a shuffle. The df cap applies to the
+    // corpus side only (a shingle common to >maxDf corpus docs carries no
+    // contamination signal and would fan the equi-join out
+    // quadratically; the inner join drops the bench side).
+    dfCapped(shingled(Scale.parallelismFloor(corpus), "doc_id"), maxDf)
+      .join(shingled(benchmark, "bench_id"), "shingle")
       .groupBy("doc_id", "bench_id")
       .agg(count(lit(1)).as("n_shared_shingles"))
   }
+
 
   /** Group near-dup pairs into duplicate clusters: connected components by
     * iterative min-label propagation, labeling every member with the

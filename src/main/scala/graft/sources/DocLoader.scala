@@ -1,12 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 import java.util.zip.{Deflater, DeflaterOutputStream, Inflater, ZipEntry, ZipInputStream, ZipOutputStream}
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Raw-document scan + per-format loader dispatch (SURVEY.md O-1..O-4).
   *
@@ -38,12 +40,29 @@ import scala.collection.mutable
   */
 object DocLoader {
 
-  /** O-1/O-2/O-3 scan: one row per file with content bytes + metadata. */
-  def scanBinary(spark: SparkSession, dir: String, glob: String = "*"): DataFrame =
-    spark.read.format("binaryFile")
+  /** O-1/O-2/O-3 scan: one row per file with content bytes + metadata.
+    * The binaryFile scan gives a zero-length file no input split, so it
+    * would vanish without a row (never counted, never quarantined); such
+    * files are added back with empty content — the extractors route them
+    * to `parse_error` — from the scan's own cached file listing, without
+    * another file-system call.
+    */
+  def scanBinary(spark: SparkSession, dir: String, glob: String = "*"): DataFrame = {
+    val scan = spark.read.format("binaryFile")
       .option("pathGlobFilter", glob)
       .load(dir)
       .select(col("path"), col("length"), col("modificationTime"), col("content"))
+    val emptyFiles = scan.queryExecution.analyzed
+      .collect { case r: LogicalRelation => r.relation }
+      .collect { case fs: HadoopFsRelation => fs.location }
+      .collect { case idx: PartitioningAwareFileIndex => idx.allFiles() }
+      .flatten.filter(_.getLen == 0)
+    if (emptyFiles.isEmpty) scan
+    else scan.unionByName(spark.createDataFrame(
+      emptyFiles.map(f => Row(f.getPath.toString, 0L,
+        new java.sql.Timestamp(f.getModificationTime), Array.emptyByteArray)).asJava,
+      scan.schema))
+  }
 
   /** O-4: extension → format tag; unsupported extensions get "unsupported"
     * (the reference raises, chroma_utils.py:70-71 — kept as a filterable

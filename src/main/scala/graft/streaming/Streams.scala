@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
+import graft.operators.Dedup
 
 /** Structured-Streaming analogs of the reference's stream-shaped behaviors
   * (SURVEY.md §2.9). The reference implements these as in-process
@@ -172,18 +173,12 @@ object Streams {
       numHashes: Int = 16,
       bands: Int = 4,
       broadcastIndex: Boolean = true): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    val sigUdf = udf { (text: String) =>
-      graft.functions.TextAnalysis.minHashSignaturePortable(
-        graft.functions.TextAnalysis.wordShingles(text, shingleWords), numHashes)
-    }
-    val withBands = (0 until bands).foldLeft(
-      docs.withColumn("sig", sigUdf(col("text")))) { (df, b) =>
-      df.withColumn(s"band_$b",
-        concat_ws("_", (lit(b) +: (0 until rows).map(r =>
-          element_at(col("sig"), b * rows + r + 1))): _*))
-    }
+    // the batch operators' signature and band keys, one column per band
+    val withBands = Dedup.bandKeys(col("sig"), numHashes, bands).zipWithIndex
+      .foldLeft(docs.withColumn("sig",
+        Dedup.portableMinHash(col("text"), shingleWords, numHashes))) {
+        case (df, (key, b)) => df.withColumn(s"band_$b", key)
+      }
     // broadcastIndex (default on): a checkpointed/derived static side
     // carries no size statistics, so without the hint EVERY per-band
     // stream-static join plans as a sort-merge that re-shuffles and
@@ -362,9 +357,11 @@ object Streams {
         col("quality_keep") && col("lsh_admitted") && col("pq_admitted"))
   }
 
-  /** Streaming line-dedup gate: the stream-shaped half of
-    * [[graft.operators.Dedup.incrementalLineDedup]]. Each arriving
-    * document explodes into lines (stateless) and stream-static
+  /** Streaming line-dedup gate: the stream-shaped half of incremental
+    * [[graft.operators.Dedup.crossDocLineDedup]] (with a standing
+    * `corpusIndex`). Each arriving document explodes into lines (the
+    * batch operator's line explode: NULL text is one empty line, so a
+    * NULL-text document still surfaces) and stream-static
     * left-joins the corpus line index, emitting
     * (doc_id, line_idx, line, keep) in append mode — no state, no
     * watermark, the static side reusable across micro-batches.
@@ -383,9 +380,7 @@ object Streams {
     // pre-bucket (the distinct itself re-runs per micro-batch either
     // way — pre-aggregate and persist the index frame to avoid that)
     val lines = index.select(col("line")).distinct().withColumn("in_corpus", lit(1))
-    docs
-      .select(col("doc_id"),
-        posexplode(split(col("text"), "\n")).as(Seq("line_idx", "line")))
+    Dedup.lineRows(docs)
       .join(if (broadcastIndex) broadcast(lines) else lines, Seq("line"), "left")
       .withColumn("keep", col("in_corpus").isNull)
       .select("doc_id", "line_idx", "line", "keep")

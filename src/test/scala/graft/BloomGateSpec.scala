@@ -34,7 +34,7 @@ class BloomGateSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("broadcast-verify path equals the plain anti-join exactly") {
-    val (out, st) = Dedup.bloomGateWithStats(history, batch, Seq("key"), fpp = 0.01)
+    val (out, st) = Dedup.bloomGate(history, batch, Seq("key"), fpp = 0.01)
     assertSameRows(out, oracle(history, batch, Seq("key")))
     assert(st.historyRows == 5000 && st.batchRows == 2000)
     assert(st.bloomNegatives + st.candidates == st.batchRows)
@@ -48,7 +48,7 @@ class BloomGateSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("shuffle-fallback verify path (maxBroadcastKeys=0) is also exact") {
-    val out = Dedup.bloomGate(history, batch, Seq("key"), fpp = 0.01,
+    val (out, _) = Dedup.bloomGate(history, batch, Seq("key"), fpp = 0.01,
       maxBroadcastKeys = 0L)
     assertSameRows(out, oracle(history, batch, Seq("key")))
   }
@@ -57,14 +57,14 @@ class BloomGateSpec extends AnyFunSuite with SparkTestSession {
     val h = Seq((1L, "a", 10), (1L, "b", 11), (2L, "a", 12)).toDF("k1", "k2", "v")
     val b = Seq((1L, "a", 90), (1L, "c", 91), (2L, "b", 92), (3L, "a", 93))
       .toDF("k1", "k2", "v")
-    val (out, st) = Dedup.bloomGateWithStats(h, b, Seq("k1", "k2"), fpp = 0.01)
+    val (out, st) = Dedup.bloomGate(h, b, Seq("k1", "k2"), fpp = 0.01)
     assertSameRows(out, oracle(h, b, Seq("k1", "k2")))
     assert(st.confirmedDups == 1)
     assert(out.count() == 3)
   }
 
   test("empty history admits the whole batch") {
-    val out = Dedup.bloomGate(history.filter(lit(false)), batch, Seq("key"))
+    val (out, _) = Dedup.bloomGate(history.filter(lit(false)), batch, Seq("key"))
     assertSameRows(out, batch)
   }
 
@@ -81,7 +81,7 @@ class BloomGateSpec extends AnyFunSuite with SparkTestSession {
   test("null keys never match (NOT-EXISTS semantics), like the anti-join") {
     val h = Seq(Some("x"), None).toDF("key")
     val b = Seq(Some("x"), Some("y"), None).toDF("key")
-    val out = Dedup.bloomGate(h, b, Seq("key"))
+    val (out, _) = Dedup.bloomGate(h, b, Seq("key"))
     assertSameRows(out, oracle(h, b, Seq("key")))
     // null-key batch row survives even though history also has a null
     assert(out.filter(col("key").isNull).count() == 1)
@@ -99,7 +99,7 @@ class BloomGateSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("broadcast-verify path never sort-merge-joins (history not shuffled)") {
-    val out = Dedup.bloomGate(history, batch, Seq("key"), fpp = 0.01)
+    val (out, _) = Dedup.bloomGate(history, batch, Seq("key"), fpp = 0.01)
     out.collect()
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("SortMergeJoin"), plan)

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import graft.operators.Dedup
 
 /** Uncapped dedup runs over the FULL sf0.1 documents table (5000 docs).
@@ -52,12 +53,17 @@ class DedupScaleSpec extends AnyFunSuite with SparkTestSession {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     // Inactive cap == uncapped operator exactly (no bucket on the full
-    // corpus exceeds a corpus-sized cap).
+    // corpus exceeds a corpus-sized cap), for every hub-capped family.
+    val capped: Seq[(String, Option[Int] => DataFrame)] = Seq(
+      "minHashLshPairsPortable" -> (c => Dedup.minHashLshPairsPortable(docs, hubCap = c)),
+      "simHashPairsBanded" -> (c => Dedup.simHashPairsBanded(docs, maxHamming = 2, hubCap = c)),
+      "minHashVerifiedPairs" -> (c => Dedup.minHashVerifiedPairs(docs, hubCap = c)))
+    capped.foreach { case (name, op) =>
+      assert(op(Some(100000)).collect().toSet == op(None).collect().toSet,
+        s"$name: inactive cap must not change the pair set")
+    }
     val uncapped = Dedup.minHashLshPairsPortable(docs)
       .as[(Long, Long, Double)].collect().toSet
-    val inactive = Dedup.minHashLshPairsHubCapped(docs, maxBandSize = 100000)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(inactive == uncapped, "inactive cap must not change the pair set")
     // A planted hot mass (500 copies of doc 0's text, ids 90000+) over
     // cap 64: every copy links to the min-id hub (doc 0 itself, which
     // shares the text), NEVER pairwise — linear, not quadratic — and
@@ -65,14 +71,14 @@ class DedupScaleSpec extends AnyFunSuite with SparkTestSession {
     val hot = docs.filter(col("doc_id") === 0).select("text")
       .crossJoin(spark.range(500).toDF("i"))
       .select((col("i") + lit(90000L)).as("doc_id"), col("text"))
-    val capped = Dedup.minHashLshPairsHubCapped(
-      docs.select("doc_id", "text").unionByName(hot), maxBandSize = 64)
+    val starred = Dedup.minHashLshPairsPortable(
+      docs.select("doc_id", "text").unionByName(hot), hubCap = Some(64))
       .as[(Long, Long, Double)].collect()
-    val hotPairs = capped.filter(p => p._2 >= 90000L)
+    val hotPairs = starred.filter(p => p._2 >= 90000L)
     assert(hotPairs.length == 500, s"expected 500 star pairs, got ${hotPairs.length}")
     assert(hotPairs.forall(p => p._1 == 0L && p._3 == 1.0),
       "every hot copy must link to hub doc 0 at agreement 1.0")
-    val coldCapped = capped.filter(p => p._1 < 90000L && p._2 < 90000L).toSet
+    val coldCapped = starred.filter(p => p._1 < 90000L && p._2 < 90000L).toSet
     val coldExpected = uncapped.filterNot(p => p._1 == 0L || p._2 == 0L)
     // doc 0's own non-hot pairs moved to hot buckets (its bands are all
     // hot now), so compare the pair set away from doc 0
@@ -91,8 +97,8 @@ class DedupScaleSpec extends AnyFunSuite with SparkTestSession {
       .crossJoin(spark.range(500).toDF("i"))
       .select((col("i") + lit(90000L)).as("doc_id"), col("text"))
     val input = docs.select("doc_id", "text").unionByName(hot)
-    val verified = Dedup.minHashVerifiedPairsHubCapped(
-      input, minAgreement = 0.25, minEditSim = 0.9, maxBandSize = 64)
+    val verified = Dedup.minHashVerifiedPairs(
+      input, minAgreement = 0.25, minEditSim = 0.9, hubCap = Some(64))
       .as[(Long, Long, Double, Double, Boolean)].collect()
     val hotPairs = verified.filter(p => p._2 >= 90000L)
     assert(hotPairs.length == 500, s"expected 500 star pairs, got ${hotPairs.length}")

@@ -268,4 +268,67 @@ class DocRoundTripSpec extends AnyFunSuite with SparkTestSession {
     assert(statusRows("bomb.docx", docx.toByteArray).toSeq ==
       Seq((null, DocLoader.StatusParseError)))
   }
+
+  /** One seeded mutation of a document's bytes: bit flips, a truncation,
+    * a byte range spliced in elsewhere, or a decimal run (a /Length,
+    * /Count, object number or xref offset) inflated or zeroed. */
+  private def mutation(b: Array[Byte]): Gen[Array[Byte]] = {
+    val last = math.max(b.length - 1, 0)
+    Gen.oneOf(
+      Gen.listOfN(8, Gen.zip(Gen.chooseNum(0, last), Gen.chooseNum(0, 7))).map { flips =>
+        val c = b.clone()
+        flips.foreach { case (i, bit) => if (i < c.length) c(i) = (c(i) ^ (1 << bit)).toByte }
+        c
+      },
+      Gen.chooseNum(0, last).map(n => b.take(n)),
+      for {
+        from <- Gen.chooseNum(0, last)
+        len <- Gen.chooseNum(1, 512)
+        to <- Gen.chooseNum(0, last)
+      } yield b.take(to) ++ b.slice(from, from + len) ++ b.drop(to),
+      Gen.zip(Gen.chooseNum(0, 10000),
+        Gen.oneOf("0", "-1", "999999999", "2147483648", "99999999999999999999")).map {
+        case (k, big) =>
+          val runs = "[0-9]+".r.findAllMatchIn(new String(b, "ISO-8859-1")).toVector
+          if (runs.isEmpty) b
+          else {
+            val m = runs(k % runs.size)
+            b.take(m.start) ++ big.getBytes("ISO-8859-1") ++ b.drop(m.end)
+          }
+      })
+  }
+
+  test("fuzz: mutated PDF/DOCX bytes each yield one row with a closed-set status") {
+    // 1-3 stacked mutations of the writers' own outputs (truncations
+    // include empty files); one load call over all of them must finish
+    // with one row per file and a status from the closed set — never a
+    // failed task, a hung executor or a silently missing file.
+    val builders: Seq[(String, Seq[String] => Array[Byte])] = Seq(
+      "pdf" -> (ps => DocLoader.buildPdf(ps)),
+      "pdf" -> (ps => DocLoader.buildPdfType0(ps)),
+      "docx" -> (ps => DocLoader.buildDocx(ps.mkString("\n"))))
+    def fuzzed(b: Array[Byte]): Gen[Array[Byte]] =
+      Gen.chooseNum(1, 3).flatMap(n =>
+        (1 to n).foldLeft(Gen.const(b))((g, _) => g.flatMap(mutation)))
+    val dir = java.nio.file.Files.createTempDirectory("graft_fuzz")
+    val nFiles = 360
+    (0 until nFiles).foreach { i =>
+      val (ext, build) = builders(i % builders.size)
+      val seed = Seed(10000L + i)
+      val pages = Gen.listOfN(2, textGen).pureApply(Gen.Parameters.default, seed)
+      val bytes = fuzzed(build(pages)).pureApply(Gen.Parameters.default, seed.next)
+      java.nio.file.Files.write(dir.resolve(f"m$i%04d.$ext"), bytes)
+    }
+    val t0 = System.nanoTime()
+    val rows = DocLoader.loadDocumentsWithStatus(spark, dir.toString)
+      .select("path", "extraction_status").collect()
+    val secs = (System.nanoTime() - t0) / 1e9
+    val nRows = rows.length
+    val nPaths = rows.map(_.getString(0)).distinct.length
+    assert(nRows == nFiles && nPaths == nFiles, s"$nRows rows, $nPaths paths for $nFiles files")
+    val statuses = rows.map(_.getString(1)).toSet
+    assert(statuses.subsetOf(Set(DocLoader.StatusOk, DocLoader.StatusUnsupportedFont,
+      DocLoader.StatusParseError, DocLoader.StatusUnsupportedFormat)), statuses)
+    assert(secs < 120, f"fuzz load took $secs%.1f s")
+  }
 }

@@ -42,7 +42,7 @@ class HashEmbedderSpec extends AnyFunSuite {
   }
 }
 
-class TextAnalysisScalaSpec extends AnyFunSuite {
+class TextAnalysisScalaSpec extends AnyFunSuite with SparkTestSession {
 
   test("language ID identifies clear samples") {
     assert(TextAnalysis.detectLanguage("the cat and the dog are going to the park") == "en")
@@ -73,8 +73,8 @@ class TextAnalysisScalaSpec extends AnyFunSuite {
   test("minhash signature estimates jaccard") {
     val s1 = TextAnalysis.wordShingles("a b c d e f g h i j k l m n o p", 3)
     val s2 = TextAnalysis.wordShingles("a b c d e f g h i j k l m n o q", 3)
-    val sig1 = TextAnalysis.minHashSignature(s1, 128)
-    val sig2 = TextAnalysis.minHashSignature(s2, 128)
+    val sig1 = TextAnalysis.minHashSignaturePortable(s1, 128)
+    val sig2 = TextAnalysis.minHashSignaturePortable(s2, 128)
     val exact = s1.toSet.intersect(s2.toSet).size.toDouble / s1.toSet.union(s2.toSet).size
     val est = sig1.zip(sig2).count { case (x, y) => x == y }.toDouble / 128
     assert(math.abs(est - exact) < 0.2, s"est=$est exact=$exact")
@@ -82,12 +82,24 @@ class TextAnalysisScalaSpec extends AnyFunSuite {
 
   test("minhash identical signatures for identical shingle sets") {
     val s = TextAnalysis.wordShingles("one two three four five six", 2)
-    assert(TextAnalysis.minHashSignature(s, 64).toSeq ==
-      TextAnalysis.minHashSignature(s.reverse, 64).toSeq)
+    assert(TextAnalysis.minHashSignaturePortable(s, 64).toSeq ==
+      TextAnalysis.minHashSignaturePortable(s.reverse, 64).toSeq)
   }
 
   test("band hashes collide for identical signatures") {
-    val sig = TextAnalysis.minHashSignature(TextAnalysis.wordShingles("x y z w v u", 2), 64)
-    assert(TextAnalysis.bandHashes(sig, 16).toSeq == TextAnalysis.bandHashes(sig, 16).toSeq)
+    // the operators' band keys (Dedup.bandKeys): identical signatures share
+    // every key; a signature differing in ONE slot differs in exactly the
+    // band holding that slot
+    import spark.implicits._
+    val sig = TextAnalysis.minHashSignaturePortable(
+      TextAnalysis.wordShingles("x y z w v u", 2), 64).toSeq
+    val other = sig.updated(5, sig(5) + 1) // slot 5 lives in band 1 (4 slots per band)
+    val keys = Seq(sig, sig, other).toDF("sig")
+      .select(graft.operators.Dedup.bandKeys(
+        org.apache.spark.sql.functions.col("sig"), 64, 16): _*)
+      .collect().map(_.toSeq.map(_.asInstanceOf[String]))
+    assert(keys(0).length == 16 && keys(0).distinct.length == 16)
+    assert(keys(0) == keys(1))
+    assert(keys(0).indices.filter(b => keys(0)(b) != keys(2)(b)) == Seq(1))
   }
 }

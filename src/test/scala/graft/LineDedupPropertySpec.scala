@@ -10,8 +10,10 @@ import graft.operators.Dedup
   * vocabulary (so cross-document collisions are common), the distributed
   * window-rank plan must agree with the obvious sequential rule —
   * iterate documents by id, lines by position, keep a line iff its text
-  * was never seen before anywhere in the corpus. Deterministic seeds,
-  * same harness style as Bm25PropertySpec.
+  * was never seen before anywhere in the corpus. The incremental form
+  * (a standing corpus line index) must leave each batch doc exactly as
+  * the rule over corpus ++ batch does. Deterministic seeds, same harness
+  * style as Bm25PropertySpec.
   */
 class LineDedupPropertySpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
@@ -37,16 +39,28 @@ class LineDedupPropertySpec extends AnyFunSuite with SparkTestSession {
     }.toMap
   }
 
+  private def asMap(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Long, String)] =
+    df.collect()
+      .map(r => r.getAs[Long]("doc_id") ->
+        ((r.getAs[Long]("n_lines"), r.getAs[Long]("n_kept"),
+          r.getAs[String]("cleaned_text"))))
+      .toMap
+
   test("cross-doc line dedup equals the sequential first-occurrence rule") {
     (1 to 12).foreach { seed =>
       val docs = corpusGen.pureApply(Gen.Parameters.default, Seed(seed.toLong))
       val expect = reference(docs)
-      val got = Dedup.crossDocLineDedup(docs.toDF("doc_id", "text")).collect()
-        .map(r => r.getAs[Long]("doc_id") ->
-          ((r.getAs[Long]("n_lines"), r.getAs[Long]("n_kept"),
-            r.getAs[String]("cleaned_text"))))
-        .toMap
+      val got = asMap(Dedup.crossDocLineDedup(docs.toDF("doc_id", "text")))
       assert(got == expect, s"\nseed $seed corpus: $docs")
+      // incremental form: docs below a seeded cut are the standing corpus
+      // (as its line index), the rest the batch — the batch docs must
+      // come out exactly as the rule over the whole corpus leaves them
+      val cut = Gen.chooseNum(0L, docs.size.toLong)
+        .pureApply(Gen.Parameters.default, Seed(seed.toLong))
+      val (corpus, batch) = docs.partition(_._1 < cut)
+      val inc = asMap(Dedup.crossDocLineDedup(batch.toDF("doc_id", "text"),
+        Some(Dedup.lineIndex(corpus.toDF("doc_id", "text")))))
+      assert(inc == expect.filter(_._1 >= cut), s"\nseed $seed cut $cut corpus: $docs")
     }
   }
 }

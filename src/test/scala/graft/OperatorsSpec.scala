@@ -268,7 +268,7 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
       .map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Long]("n_lines"), r.getAs[Long]("n_kept"), r.getAs[String]("cleaned_text"))))
       .toMap
-    val inc = asMap(Dedup.incrementalLineDedup(batch, Dedup.lineIndex(corpus)))
+    val inc = asMap(Dedup.crossDocLineDedup(batch, Some(Dedup.lineIndex(corpus))))
     assert(inc(10L) == ((3L, 2L, "new stuff\nBANNER")))
     assert(inc(11L) == ((2L, 1L, "more new")))
     assert(inc(12L) == ((2L, 0L, "")))
@@ -311,7 +311,7 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
       .map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Long]("n_toks"), r.getAs[Long]("n_kept"), r.getAs[String]("cleaned_text"))))
       .toMap
-    val inc = asMap(Dedup.incrementalSpanDedup(batch, Dedup.gramIndex(corpus, 3), k = 3))
+    val inc = asMap(Dedup.repeatedSpanDedup(batch, k = 3, Some(Dedup.gramIndex(corpus, 3))))
     assert(inc(10L) == ((6L, 2L, "x y")))
     assert(inc(11L) == ((9L, 3L, "m n o")))
     assert(inc(12L) == ((5L, 0L, "")))
@@ -360,13 +360,6 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
       .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")) ->
         r.getAs[Double]("cont_a_in_b")).toMap
     capped.get((1L, 2L)).foreach(c => assert(c == 1.0))
-  }
-
-  test("minhash LSH surfaces duplicate candidates with est jaccard 1 for dups") {
-    val out = Dedup.minHashLshPairs(docs, threshold = 0.5).collect()
-    val exactDup = out.find(r => r.getAs[Long]("doc_a") == 1L && r.getAs[Long]("doc_b") == 2L)
-    assert(exactDup.isDefined)
-    assert(exactDup.get.getAs[Double]("est_jaccard") == 1.0)
   }
 
   test("simhash pairs identical docs at hamming 0") {

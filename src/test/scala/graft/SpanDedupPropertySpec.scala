@@ -11,8 +11,10 @@ import graft.operators.Dedup
   * distributed gram-rank plan must agree with the obvious sequential
   * rule — iterate documents by id and window starts by position; a
   * window whose lowercased gram was seen before marks its k token
-  * positions covered; a token survives iff no covering window. Same
-  * harness style as LineDedupPropertySpec, deterministic seeds.
+  * positions covered; a token survives iff no covering window. The
+  * incremental form (a standing corpus gram index) must leave each batch
+  * doc exactly as the rule over corpus ++ batch does. Same harness style
+  * as LineDedupPropertySpec, deterministic seeds.
   */
 class SpanDedupPropertySpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
@@ -48,17 +50,28 @@ class SpanDedupPropertySpec extends AnyFunSuite with SparkTestSession {
     }.toMap
   }
 
+  private def asMap(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Long, String)] =
+    df.collect()
+      .map(r => r.getAs[Long]("doc_id") ->
+        ((r.getAs[Long]("n_toks"), r.getAs[Long]("n_kept"),
+          r.getAs[String]("cleaned_text"))))
+      .toMap
+
   test("span dedup equals the sequential first-occurrence window rule") {
     (1 to 12).foreach { seed =>
       val docs = corpusGen.pureApply(Gen.Parameters.default, Seed(seed.toLong))
       val expect = reference(docs, K)
-      val got = Dedup.repeatedSpanDedup(docs.toDF("doc_id", "text"), k = K)
-        .collect()
-        .map(r => r.getAs[Long]("doc_id") ->
-          ((r.getAs[Long]("n_toks"), r.getAs[Long]("n_kept"),
-            r.getAs[String]("cleaned_text"))))
-        .toMap
+      val got = asMap(Dedup.repeatedSpanDedup(docs.toDF("doc_id", "text"), k = K))
       assert(got == expect, s"\nseed $seed corpus: $docs")
+      // incremental form: docs below a seeded cut are the standing corpus
+      // (as its gram index), the rest the batch — the batch docs must
+      // come out exactly as the rule over the whole corpus leaves them
+      val cut = Gen.chooseNum(0L, docs.size.toLong)
+        .pureApply(Gen.Parameters.default, Seed(seed.toLong))
+      val (corpus, batch) = docs.partition(_._1 < cut)
+      val inc = asMap(Dedup.repeatedSpanDedup(batch.toDF("doc_id", "text"), k = K,
+        corpusIndex = Some(Dedup.gramIndex(corpus.toDF("doc_id", "text"), K))))
+      assert(inc == expect.filter(_._1 >= cut), s"\nseed $seed cut $cut corpus: $docs")
     }
   }
 }

@@ -360,6 +360,8 @@ class StreamsSpec extends AnyFunSuite with SparkTestSession {
       query.processAllAvailable()
       input.addData((11L, "another fresh line\nHEADER")) // 2nd micro-batch, same index
       query.processAllAvailable()
+      input.addData((12L, null)) // NULL text is one empty line, like the batch rule
+      query.processAllAvailable()
       val out = spark.table("linegate").collect()
         .map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("line_idx")) ->
           ((r.getAs[String]("line"), r.getAs[Boolean]("keep")))).toMap
@@ -368,7 +370,8 @@ class StreamsSpec extends AnyFunSuite with SparkTestSession {
         (10L, 1) -> (("fresh line", true)),
         (10L, 2) -> (("FOOTER", false)),
         (11L, 0) -> (("another fresh line", true)),
-        (11L, 1) -> (("HEADER", false))))
+        (11L, 1) -> (("HEADER", false)),
+        (12L, 0) -> (("", true))))
     } finally query.stop()
   }
 
